@@ -235,12 +235,14 @@ def _make_dot_f64():
     the bulk-pair replacement for the interpreted lambda-fold dot
     (guide §4.2: hand whole batches to numpy instead of evaluating a
     higher-order-function expression per pair).  Each element is cast
-    to float64 BEFORE multiplying (same op order as the SQL
-    ``cast(x AS double) * cast(y AS double)`` fold); the float64
-    summation-order difference vs the sequential fold is ~1e-16
-    relative and is absorbed by the round(·, 6) ranking contract every
-    consumer applies — the identical argument (and test gate) the
-    exact blocked-GEMM NSW builder has shipped under since round 4.
+    to float64 BEFORE multiplying, and the products are summed left to
+    right from 0.0, one column at a time across the whole batch: the
+    same float ops in the same order as the SQL ``aggregate(zip_with(
+    cast(x AS double) * cast(y AS double)), 0.0, acc + v)`` fold, so
+    the result is bit-identical to it.  (A pairwise/SIMD sum such as
+    ``np.einsum`` differs in the last ulp, which flips round(·, 6) for
+    a value on a k·1e-6 + 5e-7 boundary — pinned by
+    test_dot_f64_equals_sequential_fold_at_rounding_boundaries.)
     The ROUNDING itself stays in JVM ``F.round`` so tie semantics are
     bit-identical to the expression it replaces."""
 
@@ -256,7 +258,10 @@ def _make_dot_f64():
             return pd.Series([], dtype="float64")
         av = np.stack(a.values).astype(np.float64, copy=False)
         bv = np.stack(b.values).astype(np.float64, copy=False)
-        return pd.Series(np.einsum("ij,ij->i", av, bv))
+        acc = np.zeros(len(av))
+        for j in range(av.shape[1]):
+            acc += av[:, j] * bv[:, j]
+        return pd.Series(acc)
 
     return dot_f64
 

@@ -1,41 +1,43 @@
-"""Flat NSW (navigable-small-world) ANN with partitioned beam search —
-the structural analog of the reference's flagship HNSW vector index
+"""NSW / layered-HNSW approximate nearest-neighbour search — the
+structural analog of the reference's flagship HNSW vector index
 (schema/codegraph.surql:815-823, 934-942: ``HNSW ... EFC 150 M 12``).
 
-The reference keeps a hierarchical proximity graph and answers queries
-with greedy beam search (ef-bounded best-first).  The Spark-native
-re-expression is a ONE-layer NSW as two DataFrames:
+The reference keeps a hierarchical proximity graph and answers every
+vector query with one ef-bounded best-first search over its neighbour
+lists.  The Spark-native re-expression has two halves:
 
 * **graph build** — ``edges(src, dst)``: each vector's NSW_M nearest
-  neighbors by exact cosine (ties broken by dst id).  TWO builders,
+  neighbours by exact cosine (ties broken by dst id).  Two builders,
   same output shape: ``_nsw_edges`` (exact blocked-GEMM brute force —
   ground truth) and ``_nsw_edges_lsh`` (sign-band LSH buckets + one
   NN-descent round — the 10^12-vector path: every stage a bounded key
-  join + per-src top-M window, no O(n^2) anywhere).  Registry entries
-  ``ann_nsw_beam`` / ``ann_nsw_lsh`` expose one beam search per
-  builder, both DuckDB-oracled; recall of the LSH build vs the exact
-  build is gated in tests/test_ann_recall.py.
-* **beam search** — NSW_SEEDS deterministic entry points (smallest
-  md5(vec_id): the same Carter-Wegman-style seeding as the trained-IVF
-  init, no RNG state), then NSW_HOPS rounds of: expand the current
-  beam through the adjacency lists, score the newly reached nodes
-  against the query, keep the best NSW_EF of everything visited.
-  Top-k of the visited set is the answer.
+  join + per-src top-M window, no O(n^2) anywhere).  The layered index
+  adds exact graphs over the md5-assigned upper levels.  Graphs are
+  built once per session and data snapshot (``_cached_graph``).
+* **search** — ONE hop loop, ``_visited``, for flat and layered,
+  single and batched queries.  A search is a schedule of layers
+  (``_layers``): flat NSW (``exact``/``lsh``) is one layer of NSW_HOPS
+  wide-beam hops from NSW_SEEDS deterministic entry points (smallest
+  md5(vec_id), no RNG state); ``hnsw`` descends two upper layers with
+  a narrow beam from one top-layer entry point, then finishes on the
+  base graph.  Per hop: broadcast the beam into the src-partitioned
+  edges table, score the reached nodes against the query, keep the
+  visited set.  ``nsw_search_batch`` is the only search entry; the
+  single-query registry entries are batches of one, and the insert
+  path and the hybrid fusion call the same loop.
 
-Scale shape of the QUERY path (the part that runs per search): the
-beam is NSW_EF rows, so every hop is one broadcast join of the beam
-against an src-partitioned edges table — H sequential index lookups of
-~EF·M candidate rows each, never a corpus scan.  That is exactly the
-access pattern HNSW's ef-search does against its neighbor lists, here
-as a lookup join (SurrealDB side: crates/codegraph-vector's HNSW
-search; schema EFC 150 / M 12 — dials NSW_EF/NSW_M mirror them at
-test scale).
+Scale shape of the query path: the beam is |queries|·EF rows, so every
+hop is one broadcast join of the beam against the edges table — H
+sequential index lookups of ~EF·M candidate rows per query, never a
+corpus scan.  That is the access pattern of HNSW's ef-search against
+its neighbour lists, here as a lookup join.
 
-Exactness discipline: every cosine is round(·, 6) computed by the same
-sequential fold in both engines; beam truncation and the final top-k
-order by (cosine DESC, vec_id ASC) — total orders, so the DuckDB
-oracle (hop loop unrolled as CTEs, same trick as the trained-IVF
-k-means replay) matches bit-for-bit.
+Ranking contract: every cosine is round(·, 6) of the same float64
+dot / (norm · norm); beams and top-k order by (cosine DESC, vec_id
+ASC), a total order.  The DuckDB oracles unroll the hop loop as CTEs
+(the trick of the trained-IVF k-means replay) and compute the same
+rounded cosines, so both engines rank the same rows in the same order
+and return the same cosines to 6 decimals.
 """
 
 from __future__ import annotations
@@ -73,15 +75,6 @@ NSW_EXACT_MAX_ROWS = int(os.environ.get("NSW_EXACT_MAX_ROWS", "200000"))
 _EXACT_BCASTS: dict[str, list] = {}
 _EXACT_BCASTS_KEEP = 8
 
-_COS = (
-    "round((aggregate(zip_with({a}, {b}, (x, y) -> cast(x AS double) * cast(y AS double)), "
-    "cast(0 AS double), (acc, v) -> acc + v)) / "
-    "((sqrt(aggregate(transform({a}, x -> cast(x AS double) * cast(x AS double)), "
-    "cast(0 AS double), (acc, v) -> acc + v))) * "
-    "(sqrt(aggregate(transform({b}, x -> cast(x AS double) * cast(x AS double)), "
-    "cast(0 AS double), (acc, v) -> acc + v)))), 6)"
-)
-
 # pair cosine with the norms HOISTED to per-vector columns: the same
 # float64 values in the same division, just not recomputed per pair —
 # cuts 2/3 of the graph build's FLOPs without moving a single bit of
@@ -93,6 +86,20 @@ _DOT = (
 _NRM = (
     "sqrt(aggregate(transform({a}, x -> cast(x AS double) * cast(x AS double)), "
     "cast(0 AS double), (acc, v) -> acc + v))"
+)
+# node-vs-query cosine over (embedding, q_emb, q_nrm): the same hoisted
+# float64 arithmetic as the builders
+_COS_Q = (
+    f"round({_DOT.format(a='embedding', b='q_emb')} / "
+    f"({_NRM.format(a='embedding')} * q_nrm), 6)"
+)
+
+# DuckDB twin of the node-vs-query cosine, shared by every oracle CTE
+# that scores a node against the query
+_COS_SQL = (
+    "round(list_dot_product(cast({a} AS double[]), cast({b} AS double[]))"
+    " / (sqrt(list_dot_product(cast({a} AS double[]), cast({a} AS double[])))"
+    " * sqrt(list_dot_product(cast({b} AS double[]), cast({b} AS double[])))), 6)"
 )
 
 
@@ -334,73 +341,6 @@ def _nsw_edges_lsh(e: DataFrame) -> DataFrame:
     return top_m(score_pairs(cand2))
 
 
-def _beam_visited(
-    e: DataFrame, edges: DataFrame, cp, q_vec_id: int = 0
-) -> DataFrame:
-    """Visited set (vec_id, cosine) of a deterministic-seed beam
-    search over an (src, dst) proximity graph — shared by the
-    exact-graph, LSH+NN-descent, and hybrid-fusion entries.
-
-    Per-hop plan: broadcast the ≤NSW_EF-row beam into the edges table
-    (lookup join), score only the newly reached dst nodes, re-rank the
-    visited set, truncate to NSW_EF.  Visited-set dedup is a groupBy
-    on vec_id (cosine is a pure function of vec_id, so max() is just
-    pick-one)."""
-    q = e.filter(F.col("vec_id") == q_vec_id).select(
-        F.col("embedding").alias("q_emb")
-    )
-
-    def score(df: DataFrame) -> DataFrame:
-        # cosine(node, query) for a set of vec_ids
-        return (
-            df.join(e, "vec_id")
-            .crossJoin(F.broadcast(q))
-            .select(
-                "vec_id",
-                F.expr(_COS.format(a="embedding", b="q_emb")).alias("cosine"),
-            )
-        )
-
-    seeds = (
-        e.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(NSW_SEEDS)
-        .select("vec_id")
-    )
-    visited = score(seeds)
-    beam = visited.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(NSW_EF)
-    for _ in range(NSW_HOPS):
-        # no .distinct(): the groupBy(vec_id).max below dedups, and
-        # cosine is a pure function of vec_id — dropping the exchange
-        # saves one shuffle per hop for identical visited sets
-        reached = (
-            edges.join(
-                F.broadcast(beam.select(F.col("vec_id").alias("src"))), "src"
-            )
-            .select(F.col("dst").alias("vec_id"))
-        )
-        visited = cp(
-            visited.unionByName(score(reached))
-            .groupBy("vec_id")
-            .agg(F.max("cosine").alias("cosine"))
-        )
-        beam = visited.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(NSW_EF)
-    return visited
-
-
-def _beam_search(
-    e: DataFrame, edges: DataFrame, cp, q_vec_id: int = 0
-) -> DataFrame:
-    """Top-NSW_K (vec_id, cosine, rank) of the beam-search visited set
-    — see ``_beam_visited`` for the per-hop plan."""
-    visited = _beam_visited(e, edges, cp, q_vec_id)
-    w = Window.orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        visited.orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(NSW_K)
-        .withColumn("rank", F.row_number().over(w))
-    )
-
 
 # (applicationId, sf_dir, builder) → materialized edges.  The
 # proximity graph IS the index: the reference builds its HNSW graph at
@@ -455,138 +395,138 @@ def build_graph(spark: SparkSession, sf_dir: str, kind: str) -> int:
     ).count()
 
 
-def _ann_nsw(
-    spark: SparkSession, sf_dir: str, kind: str, _truncate: bool
-) -> DataFrame:
-    """Shared body of the two NSW entries: resolve the ``kind`` graph
-    (cached across queries), then beam-search it.
+# ------------------------------------------------ the one hop loop
 
-    Per-hop truncation: each hop's plan references the running visited
-    set twice (union leg + beam leg) — without checkpoints the subtrees
-    re-evaluate 2^NSW_HOPS times.  Checkpoints are LAZY (eager=False),
-    which drops the extra count() job eager checkpoints launch per hop;
-    note it does NOT make construction free — under AQE each
-    checkpoint's toRdd still materializes its upstream shuffle stages,
-    so the hop loop executes during construction and only the final
-    stage defers to the first action (measured: ~0.3 s action after
-    construction).  Inherent to driver-side iterative loops; the graph
-    cache amortizes the expensive part across calls.  _truncate=False
-    keeps the whole plan un-checkpointed so the plan-quality test can
-    assert the hop joins broadcast the beam side (and bypasses the
-    graph cache)."""
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+# The per-search frames below are built from SQL strings (selectExpr,
+# string filters) rather than Column objects: building a Column-based
+# select, filter or window costs the driver ~20-40 JVM round trips, a
+# SQL string one to eight, and a search builds ~10 frames per hop.
 
-    def cp(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if _truncate else df
 
-    edges = (
-        _cached_graph(spark, sf_dir, kind, lambda: _GRAPH_BUILDERS[kind](e))
-        if _truncate
-        else _GRAPH_BUILDERS[kind](e)
+def _lazy_cp(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint(eager=False)
+
+
+def _layers(
+    spark: SparkSession, sf_dir: str, e: DataFrame, kind: str
+) -> list[tuple[DataFrame, int, int]]:
+    """Top→bottom (edges, hops, beam_ef) search schedule over the
+    session-cached graphs: flat NSW (``exact``/``lsh``) is one layer of
+    NSW_HOPS wide hops; ``hnsw`` descends the two upper-layer graphs
+    with a narrow beam, then finishes on the exact base graph (shared
+    with ``exact`` through the cache)."""
+    flat = "exact" if kind == "hnsw" else kind
+    base = _cached_graph(spark, sf_dir, flat, lambda: _GRAPH_BUILDERS[flat](e))
+    if kind != "hnsw":
+        return [(base, NSW_HOPS, NSW_EF)]
+    upper = [
+        (
+            _cached_graph(
+                spark, sf_dir, f"hnsw_l{lvl}",
+                lambda lvl=lvl: _nsw_edges(_hnsw_layer_members(e, lvl)),
+            ),
+            HNSW_HOPS_UPPER,
+            HNSW_EF_UPPER,
+        )
+        for lvl in range(HNSW_MAX_LEVEL, 0, -1)
+    ]
+    return upper + [(base, HNSW_HOPS_L0, NSW_EF)]
+
+
+def _seeds(e: DataFrame) -> DataFrame:
+    """The NSW_SEEDS flat entry points: smallest md5(vec_id)."""
+    return (
+        e.selectExpr("vec_id", "md5(cast(vec_id AS string)) AS h")
+        .orderBy("h", "vec_id")
+        .limit(NSW_SEEDS)
+        .selectExpr("vec_id")
     )
-    return _beam_search(e, edges, cp)
 
 
-def ann_nsw_beam(
-    spark: SparkSession, sf_dir: str, _truncate: bool = True
-) -> DataFrame:
-    """NSW beam-search top-k (exact M-NN graph) against the vec_id=0
-    query vector — see ``_ann_nsw`` / ``_beam_search`` for the plan."""
-    return _ann_nsw(spark, sf_dir, "exact", _truncate)
-
-
-def ann_nsw_lsh(
-    spark: SparkSession, sf_dir: str, _truncate: bool = True
-) -> DataFrame:
-    """NSW beam-search top-k over the LSH + NN-descent graph — the
-    10^12-vector build path (no O(n^2) stage anywhere; see
-    ``_nsw_edges_lsh``).  Query path identical to ``ann_nsw_beam``."""
-    return _ann_nsw(spark, sf_dir, "lsh", _truncate)
-
-
-# ----------------------------------------- batched search (shared hop loop)
+def _queries(e: DataFrame) -> DataFrame:
+    """(vec_id, embedding) rows → the (qid, q_emb, q_nrm) query frame."""
+    return e.selectExpr(
+        "vec_id AS qid",
+        "embedding AS q_emb",
+        f"{_NRM.format(a='embedding')} AS q_nrm",
+    )
 
 
 def _score_q(df: DataFrame, against: DataFrame, q: DataFrame) -> DataFrame:
-    """(qid, vec_id) → (qid, vec_id, cosine) against a corpus frame
-    carrying (vec_id, embedding, nrm) and a broadcast query frame
-    carrying (qid, q_emb, q_nrm).  ONE definition shared by the
-    batched search and the insert path so the 'batch EQUALS single'
-    and 'insert scores identically to build time' contracts can't
-    drift (hoisted-norm cosine — same float ops as the builders)."""
+    """(qid, vec_id) → (qid, vec_id, cosine) against a (vec_id,
+    embedding) corpus frame and the broadcast query frame — ONE
+    definition shared by search and insert, so an inserted vector
+    scores exactly as one present at build time.  The node norm is
+    computed after the join, only for the reached rows."""
     return (
         df.join(against, "vec_id")
         .join(F.broadcast(q), "qid")
-        .select(
-            "qid",
-            "vec_id",
-            F.round(
-                F.expr(_DOT.format(a="embedding", b="q_emb"))
-                / (F.col("nrm") * F.col("q_nrm")),
-                6,
-            ).alias("cosine"),
+        .selectExpr("qid", "vec_id", f"{_COS_Q} AS cosine")
+    )
+
+
+def _top(df: DataFrame, n: int, single: bool, rank: bool = False) -> DataFrame:
+    """Per-qid top-n of (qid, vec_id, cosine) by (cosine DESC, vec_id
+    ASC) — the total order every beam, top-k and oracle ranks by.  A
+    one-query batch ranks with a global sort + limit: one TakeOrdered
+    instead of an exchange, sort and window, and it adds the int
+    ``rank`` column only when asked.  The per-qid window always
+    carries it."""
+    if not single:
+        return df.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id)"
+            " AS rank",
+        ).filter(f"rank <= {n}")
+    top = df.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(n)
+    if rank:
+        top = top.selectExpr(
+            "*", "row_number() OVER (ORDER BY cosine DESC, vec_id) AS rank"
         )
-    )
+    return top
 
 
-def _topn_q(df: DataFrame, n: int) -> DataFrame:
-    """Per-qid top-n by (cosine DESC, vec_id ASC) — the one ranking
-    window every qid-keyed stage shares."""
-    wq = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        df.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n)
-        .drop("rn")
-    )
-
-
-def _batched_visited(
-    en_corpus: DataFrame, edges: DataFrame, q: DataFrame, cp
+def _visited(
+    e: DataFrame,
+    q: DataFrame,
+    entry: DataFrame,
+    layers: list[tuple[DataFrame, int, int]],
+    cp,
+    single: bool = False,
 ) -> DataFrame:
-    """(qid, vec_id, cosine) visited set of a beam search run for MANY
-    query vectors at once — the single-query hop loop of
-    ``_beam_search`` with a qid column.  Per hop: ONE join of the
-    |queries|·EF-row beam against the src-partitioned edges table plus
-    ONE scoring join, whatever the batch size — the amortization that
-    makes vector search a query SERVICE rather than a job per query
-    (same motive as the BM25 ``topk_batch`` path).
+    """(qid, vec_id, cosine) visited set of a beam search run for every
+    query in ``q`` at once — the ONE hop loop behind flat and layered,
+    single and batched search, insert and hybrid fusion.
 
-    ``en_corpus`` must carry (vec_id, embedding, nrm); ``q`` carries
-    (qid, q_emb, q_nrm).  Seeds are the corpus-global deterministic
-    entry points (smallest md5(vec_id)) — identical to the
-    single-query path, so for any one qid the batched result EQUALS
-    the single-query result (pinned by test)."""
+    Every query starts from the ``entry`` nodes; per layer of
+    ``layers`` (top→bottom (edges, hops, ef)) and per hop: broadcast
+    the |queries|·ef-row beam into that layer's src-partitioned edges
+    table (a lookup join, the access pattern of HNSW's ef-search over
+    its neighbour lists), score the reached nodes, fold them into the
+    visited set, re-rank.  The visited set carries down from layer to
+    layer.  Dedup is the groupBy(qid, vec_id).max: cosine is a pure
+    function of (qid, vec_id), so max() is pick-one, and no per-hop
+    distinct() is needed.
 
-    def score(df: DataFrame) -> DataFrame:
-        return _score_q(df, en_corpus, q)
-
-    def topn(df: DataFrame, n: int) -> DataFrame:
-        return _topn_q(df, n)
-
-    seeds = (
-        en_corpus.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(NSW_SEEDS)
-        .select("vec_id")
-    )
-    visited = score(q.select("qid").crossJoin(F.broadcast(seeds)))
-    beam = topn(visited, NSW_EF)
-    for _ in range(NSW_HOPS):
-        # no .distinct(): groupBy(qid, vec_id).max below dedups —
-        # saves one shuffle per hop for identical visited sets
-        reached = (
-            edges.join(
-                F.broadcast(beam.select("qid", F.col("vec_id").alias("src"))),
-                "src",
+    ``cp`` truncates lineage: each hop's plan references the visited
+    set twice (union leg + beam leg), so without a checkpoint the
+    subtrees re-evaluate 2^hops times.  It also materializes ``q``
+    once, so hops stop re-scanning the corpus to broadcast it.  The
+    plan-quality test passes the identity to inspect the whole plan.
+    ``single`` picks the one-query ranking of ``_top``."""
+    q = cp(q)
+    visited = _score_q(q.selectExpr("qid").crossJoin(F.broadcast(entry)), e, q)
+    for edges, hops, ef in layers:
+        for _ in range(hops):
+            beam = _top(visited, ef, single).selectExpr("qid", "vec_id AS src")
+            reached = edges.join(F.broadcast(beam), "src").selectExpr(
+                "qid", "dst AS vec_id"
             )
-            .select("qid", F.col("dst").alias("vec_id"))
-        )
-        visited = cp(
-            visited.unionByName(score(reached))
-            .groupBy("qid", "vec_id")
-            .agg(F.max("cosine").alias("cosine"))
-        )
-        beam = topn(visited, NSW_EF)
+            visited = cp(
+                visited.unionByName(_score_q(reached, e, q))
+                .groupBy("qid", "vec_id")
+                .agg(F.expr("max(cosine) AS cosine"))
+            )
     return visited
 
 
@@ -599,31 +539,21 @@ def nsw_search_batch(
 ) -> DataFrame:
     """Per-query top-k (qid, vec_id, cosine, rank) for a BATCH of
     query vectors (taken from the embeddings table by id) through the
-    session-cached ``kind`` proximity graph — the vector-side query
-    service.  One Spark job serves the whole batch; per-qid results
-    are identical to running ``ann_nsw_beam``-style single searches
-    (gated by tests/test_nsw_incremental.py)."""
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    en = e.select(
-        "vec_id", "embedding", F.expr(_NRM.format(a="embedding")).alias("nrm")
+    session-cached ``kind`` ∈ {exact, lsh, hnsw} index — the only
+    search.  Per hop, ONE beam join and ONE scoring join serve the
+    whole batch, so per-qid results equal a batch of one (pinned by
+    test); the single-query registry entries ARE batches of one."""
+    e = t(spark, sf_dir, "embeddings").selectExpr("vec_id", "embedding")
+    single = len(set(qids)) == 1
+    visited = _visited(
+        e,
+        _queries(e.filter(F.col("vec_id").isin(qids))),
+        _hnsw_entry(e) if kind == "hnsw" else _seeds(e),
+        _layers(spark, sf_dir, e, kind),
+        _lazy_cp,
+        single,
     )
-    q = en.filter(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    edges = _cached_graph(
-        spark, sf_dir, kind, lambda: _GRAPH_BUILDERS[kind](e)
-    )
-    visited = _batched_visited(
-        en, edges, q, lambda df: df.localCheckpoint(eager=False)
-    )
-    wq = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        visited.withColumn("rank", F.row_number().over(wq).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vec_id", "cosine", "rank")
-    )
+    return _top(visited, k, single, rank=True)
 
 
 def nsw_search_batch_cached(
@@ -660,6 +590,19 @@ def nsw_search_batch_cached(
     )
 
 
+def ann_nsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """NSW beam-search top-k (exact M-NN graph) for the vec_id=0 query
+    — a batch of one through ``nsw_search_batch``."""
+    return nsw_search_batch(spark, sf_dir, [0], kind="exact").drop("qid")
+
+
+def ann_nsw_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """NSW beam-search top-k over the LSH + NN-descent graph — the
+    10^12-vector build path (no O(n^2) stage anywhere; see
+    ``_nsw_edges_lsh``).  Query path identical to ``ann_nsw_beam``."""
+    return nsw_search_batch(spark, sf_dir, [0], kind="lsh").drop("qid")
+
+
 # ---------------------------------------------------- incremental insert
 
 
@@ -678,9 +621,9 @@ def nsw_insert(
     Plan shape, all stages bounded by |batch| — never a corpus scan:
 
     1. BATCHED beam search of the old graph for all new vectors at
-       once (the single-query hop loop of ``_beam_search`` with a qid
-       column: per hop, one join of the |batch|·EF-row beam against
-       the src-partitioned edges table + one scoring join).
+       once (``_visited``: per hop, one join of the |batch|·EF-row
+       beam against the src-partitioned edges table + one scoring
+       join).
     2. New×new candidates via the shared sign-band LSH buckets
        (``band_sigs`` — same-batch vectors must see each other, as
        sequential HNSW inserts do), verified by exact cosine.
@@ -715,16 +658,11 @@ def nsw_insert(
             "vec_id", "embedding", F.expr(_NRM.format(a="embedding")).alias("nrm")
         )
 
-    en_old, en_new = with_nrm(e_old), with_nrm(e_new)
-    q = en_new.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
+    q = _queries(e_new)
 
-    # 1. batched beam search of the OLD graph (shared hop loop)
-    visited = _batched_visited(
-        en_old, edges_old, q, lambda df: df.localCheckpoint(eager=False)
+    # 1. batched beam search of the OLD graph (the one hop loop)
+    visited = _visited(
+        e_old, q, _seeds(e_old), [(edges_old, NSW_HOPS, NSW_EF)], _lazy_cp
     )
 
     # 2. same-batch candidates via the shared LSH bands
@@ -743,11 +681,11 @@ def nsw_insert(
 
     # 3. neighbor selection → forward edges
     cand = (
-        visited.unionByName(_score_q(nn_cand, en_new, q))
+        visited.unionByName(_score_q(nn_cand, e_new, q))
         .groupBy("qid", "vec_id")
         .agg(F.max("cosine").alias("cosine"))
     )
-    fwd = _topn_q(cand, NSW_M).select(
+    fwd = _top(cand, NSW_M, False).select(
         F.col("qid").alias("src"), F.col("vec_id").alias("dst"), F.col("cosine").alias("cos")
     )
     rev = fwd.select(
@@ -755,7 +693,7 @@ def nsw_insert(
     )
 
     # 4. shrink ONLY the affected lists back to M
-    en_full = en_old.unionByName(en_new)
+    en_full = with_nrm(e_old).unionByName(with_nrm(e_new))
     affected = rev.select("src").distinct()
     old_aff = (
         edges_old.join(F.broadcast(affected), "src")
@@ -873,11 +811,6 @@ def _nsw_cte_pieces(graph_ctes: str) -> list[str]:
     list (final visited set = ``v{NSW_HOPS}``) so callers can append
     their own final SELECT — the plain top-k entry and the hybrid
     fusion entry share these pieces."""
-    cos = (
-        "round(list_dot_product(cast({a} AS double[]), cast({b} AS double[]))"
-        " / (sqrt(list_dot_product(cast({a} AS double[]), cast({a} AS double[])))"
-        " * sqrt(list_dot_product(cast({b} AS double[]), cast({b} AS double[])))), 6)"
-    )
     pieces = [
         f"""
 q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
@@ -892,7 +825,7 @@ seeds AS (
   ORDER BY md5(cast(vec_id AS varchar)), vec_id LIMIT {NSW_SEEDS}
 ),
 v0 AS (
-  SELECT s.vec_id, {cos.format(a="e.embedding", b="q.q_emb")} AS cosine
+  SELECT s.vec_id, {_COS_SQL.format(a="e.embedding", b="q.q_emb")} AS cosine
   FROM seeds s JOIN embeddings e ON e.vec_id = s.vec_id CROSS JOIN q
 ),
 b0 AS (SELECT vec_id FROM v0 ORDER BY cosine DESC, vec_id LIMIT {NSW_EF})"""
@@ -903,7 +836,7 @@ r{i + 1} AS (
   SELECT DISTINCT g.dst AS vec_id FROM b{i} JOIN edges g ON g.src = b{i}.vec_id
 ),
 n{i + 1} AS (
-  SELECT r.vec_id, {cos.format(a="e.embedding", b="q.q_emb")} AS cosine
+  SELECT r.vec_id, {_COS_SQL.format(a="e.embedding", b="q.q_emb")} AS cosine
   FROM r{i + 1} r JOIN embeddings e ON e.vec_id = r.vec_id CROSS JOIN q
 ),
 v{i + 1} AS (
@@ -948,11 +881,6 @@ def ann_nsw_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _nsw_batch_sql(graph_ctes: str) -> str:
     """``_nsw_sql`` generalized with a qid column: same unrolled hop
     CTEs, with every per-query step PARTITIONed BY qid."""
-    cos = (
-        "round(list_dot_product(cast({a} AS double[]), cast({b} AS double[]))"
-        " / (sqrt(list_dot_product(cast({a} AS double[]), cast({a} AS double[])))"
-        " * sqrt(list_dot_product(cast({b} AS double[]), cast({b} AS double[])))), 6)"
-    )
     qids = ", ".join(str(x) for x in NSW_BATCH_QIDS)
     top_ef = (
         "SELECT qid, vec_id FROM ("
@@ -975,7 +903,7 @@ seeds AS (
   ORDER BY md5(cast(vec_id AS varchar)), vec_id LIMIT {NSW_SEEDS}
 ),
 v0 AS (
-  SELECT q.qid, s.vec_id, {cos.format(a="e.embedding", b="q.q_emb")} AS cosine
+  SELECT q.qid, s.vec_id, {_COS_SQL.format(a="e.embedding", b="q.q_emb")} AS cosine
   FROM seeds s JOIN embeddings e ON e.vec_id = s.vec_id CROSS JOIN q
 ),
 b0 AS ({top_ef.format(v="v0")})"""
@@ -987,7 +915,7 @@ r{i + 1} AS (
   FROM b{i} b JOIN edges g ON g.src = b.vec_id
 ),
 n{i + 1} AS (
-  SELECT r.qid, r.vec_id, {cos.format(a="e.embedding", b="q.q_emb")} AS cosine
+  SELECT r.qid, r.vec_id, {_COS_SQL.format(a="e.embedding", b="q.q_emb")} AS cosine
   FROM r{i + 1} r JOIN embeddings e ON e.vec_id = r.vec_id
   JOIN q ON q.qid = r.qid
 ),
@@ -1054,8 +982,12 @@ _HNSW_L2_CHARS = ("0",)
 _HNSW_L1_CHARS = ("0", "1", "2", "3")
 
 
-def _lvl_char(col: str = "vec_id") -> F.Column:
-    return F.substring(F.md5(F.col(col).cast("string")), 32, 1)
+# the md5 hex char a vector's level is read from
+_LVL_CHAR = "substr(md5(cast(vec_id AS string)), 32, 1)"
+
+
+def _lvl_char() -> F.Column:
+    return F.expr(_LVL_CHAR)
 
 
 def _hnsw_layer_members(e: DataFrame, level: int) -> DataFrame:
@@ -1069,21 +1001,17 @@ def _hnsw_entry(e: DataFrame) -> DataFrame:
     layer 2' whenever layer 2 has members, and degrades to the best
     lower-layer node on corpora too small for the top layer instead
     of silently returning an empty result set)."""
-    c = _lvl_char()
-    lvl = (
-        F.when(c.isin(*_HNSW_L2_CHARS), F.lit(2))
-        .when(c.isin(*_HNSW_L1_CHARS), F.lit(1))
-        .otherwise(F.lit(0))
-    )
+    l2, l1 = ("', '".join(c) for c in (_HNSW_L2_CHARS, _HNSW_L1_CHARS))
     return (
-        e.select(
+        e.selectExpr(
             "vec_id",
-            lvl.alias("lvl"),
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
+            f"CASE WHEN {_LVL_CHAR} IN ('{l2}') THEN 2"
+            f" WHEN {_LVL_CHAR} IN ('{l1}') THEN 1 ELSE 0 END AS lvl",
+            "md5(cast(vec_id AS string)) AS h",
         )
         .orderBy(F.desc("lvl"), "h", "vec_id")
         .limit(1)
-        .select("vec_id")
+        .selectExpr("vec_id")
     )
 
 
@@ -1092,73 +1020,17 @@ def build_hnsw_graphs(spark: SparkSession, sf_dir: str) -> dict[int, int]:
     {level: edge_count}.  Layer 0 shares the ``exact`` cache entry
     with ann_nsw_beam — building one warms the other."""
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    counts = {}
-    for lvl in range(HNSW_MAX_LEVEL, 0, -1):
-        members = _hnsw_layer_members(e, lvl)
-        counts[lvl] = _cached_graph(
-            spark, sf_dir, f"hnsw_l{lvl}", lambda m=members: _nsw_edges(m)
-        ).count()
-    counts[0] = _cached_graph(
-        spark, sf_dir, "exact", lambda: _nsw_edges(e)
-    ).count()
-    return counts
+    layers = _layers(spark, sf_dir, e, "hnsw")
+    return {
+        HNSW_MAX_LEVEL - i: edges.count() for i, (edges, _, _) in enumerate(layers)
+    }
 
 
-def ann_hnsw_layered(
-    spark: SparkSession, sf_dir: str, _truncate: bool = True
-) -> DataFrame:
+def ann_hnsw_layered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Layered-HNSW top-k against the vec_id=0 query: single-seed
     top-layer entry, greedy narrow-beam descent, wide-beam base-layer
-    finish — (vec_id, cosine, rank), same contract as ann_nsw_beam."""
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-
-    def cp(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if _truncate else df
-
-    if _truncate:
-        layers = _hnsw_layer_plan(spark, sf_dir, e)
-    else:  # plan-quality tests: uncached, un-truncated lineage
-        layers = [
-            (_nsw_edges(_hnsw_layer_members(e, lvl)), HNSW_HOPS_UPPER, HNSW_EF_UPPER)
-            for lvl in range(HNSW_MAX_LEVEL, 0, -1)
-        ] + [(_nsw_edges(e), HNSW_HOPS_L0, NSW_EF)]
-
-    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-
-    def score(df: DataFrame) -> DataFrame:
-        return (
-            df.join(e, "vec_id")
-            .crossJoin(F.broadcast(q))
-            .select(
-                "vec_id",
-                F.expr(_COS.format(a="embedding", b="q_emb")).alias("cosine"),
-            )
-        )
-
-    visited = score(_hnsw_entry(e))
-    for edges, hops, ef in layers:
-        beam = visited.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(ef)
-        for _ in range(hops):
-            reached = (
-                edges.join(
-                    F.broadcast(beam.select(F.col("vec_id").alias("src"))),
-                    "src",
-                )
-                .select(F.col("dst").alias("vec_id"))
-                .distinct()
-            )
-            visited = cp(
-                visited.unionByName(score(reached))
-                .groupBy("vec_id")
-                .agg(F.max("cosine").alias("cosine"))
-            )
-            beam = visited.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(ef)
-    w = Window.orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        visited.orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(NSW_K)
-        .withColumn("rank", F.row_number().over(w))
-    )
+    finish — a batch of one through ``nsw_search_batch``."""
+    return nsw_search_batch(spark, sf_dir, [0], kind="hnsw").drop("qid")
 
 
 def _hnsw_sql() -> str:
@@ -1166,11 +1038,6 @@ def _hnsw_sql() -> str:
     graphs (top-M windows over the lvl-filtered exact pair join), the
     single-seed entry, then one hop block per (layer, hop) with that
     layer's beam width — stage-for-stage the Spark plan above."""
-    cos = (
-        "round(list_dot_product(cast({a} AS double[]), cast({b} AS double[]))"
-        " / (sqrt(list_dot_product(cast({a} AS double[]), cast({a} AS double[])))"
-        " * sqrt(list_dot_product(cast({b} AS double[]), cast({b} AS double[])))), 6)"
-    )
     l2 = ", ".join(f"'{c}'" for c in _HNSW_L2_CHARS)
     l1 = ", ".join(f"'{c}'" for c in _HNSW_L1_CHARS)
     pieces = [
@@ -1200,7 +1067,7 @@ seeds AS (
   ORDER BY lvl DESC, md5(cast(vec_id AS varchar)), vec_id LIMIT 1
 ),
 v0 AS (
-  SELECT s.vec_id, {cos.format(a="e.embedding", b="q.q_emb")} AS cosine
+  SELECT s.vec_id, {_COS_SQL.format(a="e.embedding", b="q.q_emb")} AS cosine
   FROM seeds s JOIN embeddings e ON e.vec_id = s.vec_id CROSS JOIN q
 )"""
     ]
@@ -1217,7 +1084,7 @@ r{i + 1} AS (
   SELECT DISTINCT g.dst AS vec_id FROM b{i} JOIN {graph} g ON g.src = b{i}.vec_id
 ),
 n{i + 1} AS (
-  SELECT r.vec_id, {cos.format(a="e.embedding", b="q.q_emb")} AS cosine
+  SELECT r.vec_id, {_COS_SQL.format(a="e.embedding", b="q.q_emb")} AS cosine
   FROM r{i + 1} r JOIN embeddings e ON e.vec_id = r.vec_id CROSS JOIN q
 ),
 v{i + 1} AS (
@@ -1238,95 +1105,18 @@ ANN_HNSW_LAYERED_SQL = _hnsw_sql()
 
 # --------------------------------------- batched layered-HNSW service
 
-def _hnsw_layer_plan(
-    spark: SparkSession, sf_dir: str, e: DataFrame
-) -> list[tuple[DataFrame, int, int]]:
-    """Top→bottom (edges, hops, beam_ef) plan over the session-cached
-    layer graphs — ONE definition shared by the single-query and
-    batched layered searches so their descent schedules can't drift."""
-    layers: list[tuple[DataFrame, int, int]] = []
-    for lvl in range(HNSW_MAX_LEVEL, 0, -1):
-        members = _hnsw_layer_members(e, lvl)
-        layers.append((
-            _cached_graph(spark, sf_dir, f"hnsw_l{lvl}", lambda m=members: _nsw_edges(m)),
-            HNSW_HOPS_UPPER,
-            HNSW_EF_UPPER,
-        ))
-    layers.append((
-        _cached_graph(spark, sf_dir, "exact", lambda: _nsw_edges(e)),
-        HNSW_HOPS_L0,
-        NSW_EF,
-    ))
-    return layers
-
-
-def hnsw_search_batch(
-    spark: SparkSession, sf_dir: str, qids: list[int], k: int = NSW_K
-) -> DataFrame:
-    """Per-query top-k for a BATCH of query vectors through the
-    layered-HNSW index: ONE qid-keyed descent serves the whole batch
-    (per layer, per hop: one join of the |batch|·EF beam against that
-    layer's edges + one scoring join) — the layered twin of
-    ``nsw_search_batch``, completing the index family's service role.
-    Entry point is the SAME single top-layer node as the single-query
-    path, so per-qid results equal ``ann_hnsw_layered`` (test-pinned
-    for qid 0)."""
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    en = e.select(
-        "vec_id", "embedding", F.expr(_NRM.format(a="embedding")).alias("nrm")
-    )
-    q = en.filter(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cp = lambda df: df.localCheckpoint(eager=False)  # noqa: E731
-
-    visited = _score_q(
-        q.select("qid").crossJoin(F.broadcast(_hnsw_entry(e))), en, q
-    )
-    for edges, hops, ef in _hnsw_layer_plan(spark, sf_dir, e):
-        beam = _topn_q(visited, ef)
-        for _ in range(hops):
-            # no .distinct(): groupBy(qid, vec_id).max below dedups —
-            # saves one shuffle per hop for identical visited sets
-            reached = (
-                edges.join(
-                    F.broadcast(beam.select("qid", F.col("vec_id").alias("src"))),
-                    "src",
-                )
-                .select("qid", F.col("dst").alias("vec_id"))
-            )
-            visited = cp(
-                visited.unionByName(_score_q(reached, en, q))
-                .groupBy("qid", "vec_id")
-                .agg(F.max("cosine").alias("cosine"))
-            )
-            beam = _topn_q(visited, ef)
-    wq = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        visited.withColumn("rank", F.row_number().over(wq).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vec_id", "cosine", "rank")
-    )
-
 
 def ann_hnsw_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: the fixed NSW_BATCH_QIDS batch through the
     layered-HNSW descent — one qid-keyed job for the whole batch,
     oracled by the fully unrolled qid-keyed layered CTE replay."""
-    return hnsw_search_batch(spark, sf_dir, list(NSW_BATCH_QIDS))
+    return nsw_search_batch(spark, sf_dir, list(NSW_BATCH_QIDS), kind="hnsw")
 
 
 def _hnsw_batch_sql() -> str:
     """``_hnsw_sql`` generalized with a qid column: levels + the three
     layer graphs once, then per-(layer, hop) blocks PARTITIONed BY qid
     with that layer's beam width."""
-    cos = (
-        "round(list_dot_product(cast({a} AS double[]), cast({b} AS double[]))"
-        " / (sqrt(list_dot_product(cast({a} AS double[]), cast({a} AS double[])))"
-        " * sqrt(list_dot_product(cast({b} AS double[]), cast({b} AS double[])))), 6)"
-    )
     l2 = ", ".join(f"'{c}'" for c in _HNSW_L2_CHARS)
     l1 = ", ".join(f"'{c}'" for c in _HNSW_L1_CHARS)
     qids = ", ".join(str(x) for x in NSW_BATCH_QIDS)
@@ -1364,7 +1154,7 @@ seeds AS (
   ORDER BY lvl DESC, md5(cast(vec_id AS varchar)), vec_id LIMIT 1
 ),
 v0 AS (
-  SELECT q.qid, s.vec_id, {cos.format(a="e.embedding", b="q.q_emb")} AS cosine
+  SELECT q.qid, s.vec_id, {_COS_SQL.format(a="e.embedding", b="q.q_emb")} AS cosine
   FROM seeds s JOIN embeddings e ON e.vec_id = s.vec_id CROSS JOIN q
 )"""
     ]
@@ -1382,7 +1172,7 @@ r{i + 1} AS (
   FROM b{i} b JOIN {graph} g ON g.src = b.vec_id
 ),
 n{i + 1} AS (
-  SELECT r.qid, r.vec_id, {cos.format(a="e.embedding", b="q.q_emb")} AS cosine
+  SELECT r.qid, r.vec_id, {_COS_SQL.format(a="e.embedding", b="q.q_emb")} AS cosine
   FROM r{i + 1} r JOIN embeddings e ON e.vec_id = r.vec_id
   JOIN q ON q.qid = r.qid
 ),
@@ -1423,20 +1213,8 @@ def hybrid_nsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     treats docs outside the ANN result."""
     from .indexed import bm25_index_topk
 
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    edges = _cached_graph(
-        spark, sf_dir, "lsh", lambda: _GRAPH_BUILDERS["lsh"](e)
-    )
-    visited = _beam_visited(
-        e, edges, lambda df: df.localCheckpoint(eager=False)
-    )
-    vec = (
-        visited.orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.col("cosine").alias("vector_score"),
-        )
+    vec = nsw_search_batch(spark, sf_dir, [0], kind="lsh", k=10).select(
+        F.col("vec_id").alias("doc_id"), F.col("cosine").alias("vector_score")
     )
     text = bm25_index_topk(spark, sf_dir).select(
         "doc_id", F.col("score").alias("text_score")

@@ -109,7 +109,11 @@ class Catalog:
         after the job completes — identical visibility semantics to the
         committed ``write`` path.  Task retries overwrite their own
         deterministic part name, so the protocol is retry-idempotent
-        (local mode runs no speculative duplicates).
+        only while no two attempts of a task can run at once: a
+        speculative or zombie attempt on a cluster could commit a
+        duplicate or torn part file.  Local mode runs neither, so any
+        other master raises ``RuntimeError`` before anything is
+        written.
 
         With ``ledger_stats=True`` the corpus scalars
         (n_docs/avgdl/n_tokens/input_fingerprint — CORPUS_AGGS
@@ -121,6 +125,13 @@ class Catalog:
         from pyspark.sql import functions as F  # noqa: F401 (API parity)
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        master = df.sparkSession.sparkContext.master
+        if not master.startswith("local"):
+            raise RuntimeError(
+                f"write_arrow_direct needs a local master, got {master!r}: "
+                "its rename-on-close commit is unsafe under speculative "
+                "or zombie task attempts; use Catalog.write"
+            )
         path = self.path(name)
         shutil.rmtree(path, ignore_errors=True)
         os.makedirs(path, exist_ok=True)

@@ -184,7 +184,7 @@ def test_round6_half_up_matches_duckdb_round():
 def test_hnsw_batched_search_equals_single_query(spark):
     """The batched layered descent must be per-qid IDENTICAL to the
     single-query layered search (same entry point, same per-layer hop
-    schedule via the shared _hnsw_layer_plan) — the contract that lets
+    schedule via the shared _layers) — the contract that lets
     the service answer batches without changing results."""
     from codegraph_rust_spark.functions import nsw
 
@@ -234,3 +234,46 @@ def test_hnsw_entry_falls_back_when_top_layer_empty(spark, tmp_path):
     # vec 0 has level 0 at this seed (md5('0') ends in 'a') — the
     # query vector itself must still be found through the descent
     assert out[0]["vec_id"] == 0 and out[0]["rank"] == 1
+
+
+def test_dot_f64_equals_sequential_fold_at_rounding_boundaries(spark):
+    """dot_f64 (the Arrow-vectorized dot behind the LSH graph build and
+    the near-dup verify leg) must return EXACTLY the sequential
+    ``aggregate(zip_with(...))`` fold it replaces.  The vectors are
+    random but snapped so each dot lands within a few ulps of a
+    k·1e-6 + 5e-7 rounding boundary: there a summation-order
+    difference of one ulp would flip round(·, 6) and, with it, an edge
+    ranking."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from codegraph_rust_spark.functions.dedup_approx import dot_f64
+    from codegraph_rust_spark.functions.nsw import _DOT
+
+    rng = np.random.default_rng(20240617)
+    rows = []
+    for i in range(400):
+        a = rng.standard_normal(64) * rng.choice([1e-3, 1.0, 30.0])
+        b = rng.standard_normal(64)
+        a[-1] = 1.0
+        partial = 0.0
+        for x, y in zip(a[:-1], b[:-1]):
+            partial += x * y
+        boundary = (np.floor(partial * 1e6) + 0.5) / 1e6
+        # last term lands the sequential fold on (or ulps off) the boundary
+        b[-1] = boundary - partial + rng.integers(-4, 5) * np.spacing(boundary)
+        rows.append((i, a.tolist(), b.tolist()))
+    df = spark.createDataFrame(rows, "i int, a array<double>, b array<double>")
+    got = df.select(
+        "i",
+        dot_f64("a", "b").alias("vec"),
+        F.expr(_DOT.format(a="a", b="b")).alias("fold"),
+    ).collect()
+    assert len(got) == len(rows)
+    diff = [(r["i"], r["vec"], r["fold"]) for r in got if r["vec"] != r["fold"]]
+    assert not diff, diff[:5]
+    # and the boundary snap is real: most dots sit within 1e-9 of a half
+    near = sum(
+        abs(r["fold"] * 1e6 - np.floor(r["fold"] * 1e6) - 0.5) < 1e-3 for r in got
+    )
+    assert near >= len(got) // 2, near

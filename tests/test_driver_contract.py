@@ -156,3 +156,26 @@ def test_all_outputs_are_driver_canonicalizable(spark):
             if isinstance(f.dataType, banned):
                 offenders.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
     assert not offenders, offenders
+
+
+# sha256 of the NSW/HNSW oracle SQL strings.  These statements are part
+# of the driver contract: a refactor of nsw.py (shared SQL fragments,
+# hop-loop rewrites) must leave every one of them byte-identical.
+NSW_SQL_SHA256 = {
+    "ANN_NSW_BEAM_SQL": "35616da2ae9f8eba5642e0edd45d411eacd568b10f303ec1b2a51d90f7dcd2f6",
+    "ANN_NSW_LSH_SQL": "3fef595d50b168a7a62ac1d61d633fae5d1895f360aba2b209ea8fa24be8b192",
+    "ANN_NSW_BATCH_SQL": "2797e5900200b65c12721c8c4cb25e6a977a1e5d56d75ff53d91aaa4d5860bef",
+    "ANN_HNSW_LAYERED_SQL": "cff9b4b79baacec7103b288eb6dd45a62657cd0e6940d68e8d0343fd574b976b",
+    "ANN_HNSW_BATCH_SQL": "c5669459297a65057e7a65078e45924a9f1d0cb7638611bab9018069603aaa19",
+    "HYBRID_NSW_TOPK_SQL": "e1bda78b4898511ca59cdffd290c97d5276c2c1f1c34384b24019269d321b051",
+}
+
+
+@pytest.mark.parametrize("const", sorted(NSW_SQL_SHA256))
+def test_nsw_oracle_sql_is_pinned(const):
+    import hashlib
+
+    from codegraph_rust_spark.functions import nsw
+
+    sql = getattr(nsw, const)
+    assert hashlib.sha256(sql.encode()).hexdigest() == NSW_SQL_SHA256[const]

@@ -91,6 +91,24 @@ def test_manifest_lineage(spark, tiny_index):
         post.agg(F.sum("n")).collect()[0][0]
 
 
+def test_write_arrow_direct_refuses_non_local_master(spark, tmp_path, monkeypatch):
+    """The worker-direct writer commits by rename-on-close, which is
+    only safe without speculative or zombie task attempts: on any
+    non-local master it must fail loudly before touching the table."""
+    import pytest
+
+    from codegraph_rust_spark.sources.catalog import Catalog
+
+    cat = Catalog(str(tmp_path / "cat"))
+    df = spark.range(3)
+    cat.write_arrow_direct(df, "ok")
+    assert cat.exists("ok")
+    monkeypatch.setattr(spark.sparkContext, "master", "yarn")
+    with pytest.raises(RuntimeError, match="local master"):
+        cat.write_arrow_direct(df, "ok")
+    assert cat.exists("ok")  # the committed table was not touched
+
+
 def test_big_first_scheduling_same_index(spark, tiny_index, tmp_path):
     """schedule_big_first range-partitions the tokenize input on payload
     length DESC (reference parser.rs:105-107 big-files-first); the

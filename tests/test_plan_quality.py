@@ -81,45 +81,56 @@ def test_embedder_is_one_shuffle_with_partial_aggs(spark):
     assert "HashAggregate" in p
 
 
-def test_nsw_beam_hops_are_broadcast_lookups(spark):
-    """Every beam-search hop must join the ≤NSW_EF-row beam into the
-    edges table as a broadcast lookup — the HNSW ef-search access
-    pattern.  A sort-merge join here would shuffle the whole adjacency
-    table per hop, which is the plan that dies at 10^12 vectors."""
-    from codegraph_rust_spark.functions.nsw import ann_nsw_beam
+def _assert_hops_broadcast(spark, schedule, n_queries):
+    """Every beam-search hop, at every layer, must join the
+    (|batch|·EF)-row beam into that layer's edges table as a broadcast
+    lookup — the HNSW ef-search access pattern.  A sort-merge join here
+    would shuffle the whole adjacency table per hop, which is the plan
+    that dies at 10^12 vectors.  The identity ``cp`` keeps the whole hop
+    loop in one plan; the 8-row seed fan-out is a broadcast nested loop
+    by construction — bounded, allowed."""
+    from pyspark.sql import functions as F
 
-    p = _plan(ann_nsw_beam(spark, SF, _truncate=False))
+    from codegraph_rust_spark.functions import nsw
+    from codegraph_rust_spark.functions.common import t
+
+    e = t(spark, SF, "embeddings").select("vec_id", "embedding")
+    if schedule == "flat":
+        entry = nsw._seeds(e)
+        layers = [(nsw._nsw_edges(e), nsw.NSW_HOPS, nsw.NSW_EF)]
+    else:
+        entry = nsw._hnsw_entry(e)
+        layers = [
+            (
+                nsw._nsw_edges(nsw._hnsw_layer_members(e, lvl)),
+                nsw.HNSW_HOPS_UPPER,
+                nsw.HNSW_EF_UPPER,
+            )
+            for lvl in range(nsw.HNSW_MAX_LEVEL, 0, -1)
+        ] + [(nsw._nsw_edges(e), nsw.HNSW_HOPS_L0, nsw.NSW_EF)]
+    q = nsw._queries(e.filter(F.col("vec_id") < n_queries))
+    visited = nsw._visited(e, q, entry, layers, lambda d: d, n_queries == 1)
+    p = _plan(visited)
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
+
+
+def test_nsw_beam_hops_are_broadcast_lookups(spark):
+    """Flat schedule, one query: the global sort + limit ranking."""
+    _assert_hops_broadcast(spark, "flat", 1)
 
 
 def test_nsw_batched_search_hops_are_broadcast_lookups(spark):
-    """The batched query service must keep the same hop plan as the
-    single-query path: the (|batch|·EF)-row beam broadcasts into the
-    src-partitioned edges table, never a shuffle of the adjacency
-    lists.  (The 8-row seed fan-out is a broadcast nested loop by
-    construction — bounded, allowed.)"""
-    from pyspark.sql import functions as F
+    """Flat schedule, three queries: the per-qid window ranking must
+    keep the same broadcast hop plan as the single-query path."""
+    _assert_hops_broadcast(spark, "flat", 3)
 
-    from codegraph_rust_spark.functions.common import t
-    from codegraph_rust_spark.functions.nsw import (
-        _NRM,
-        _batched_visited,
-        _nsw_edges,
-    )
 
-    e = t(spark, SF, "embeddings").select("vec_id", "embedding")
-    en = e.select(
-        "vec_id", "embedding", F.expr(_NRM.format(a="embedding")).alias("nrm")
-    )
-    q = en.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    p = _plan(_batched_visited(en, _nsw_edges(e), q, lambda d: d))
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
+def test_hnsw_layered_hops_are_broadcast_lookups(spark):
+    """Layered schedule: every upper layer and layer 0, for a one-query
+    and a three-query batch."""
+    for n_queries in (1, 3):
+        _assert_hops_broadcast(spark, "layered", n_queries)
 
 
 def test_nsw_lsh_graph_build_has_no_quadratic_join(spark):
@@ -134,17 +145,6 @@ def test_nsw_lsh_graph_build_has_no_quadratic_join(spark):
     p = _plan(_nsw_edges_lsh(e))
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
-
-
-def test_hnsw_layered_hops_are_broadcast_lookups(spark):
-    """The layered descent must keep the flat path's hop plan at every
-    layer: the ≤EF-row beam broadcasts into that layer's edges table —
-    never a shuffle of adjacency lists, never a sort-merge join."""
-    from codegraph_rust_spark.functions.nsw import ann_hnsw_layered
-
-    p = _plan(ann_hnsw_layered(spark, SF, _truncate=False))
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
 
 
 def test_dup_span_profile_partial_aggs_no_quadratic_join(spark):
