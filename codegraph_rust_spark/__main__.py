@@ -143,8 +143,7 @@ def cmd_stats(args) -> None:
     spark = _spark(args.cpus)
     cat = Catalog(args.index_dir)
     out = {}
-    row = cat.read(spark, "corpus_stats").collect()[0]
-    out["corpus"] = {k: row[k] for k in row.asDict()}
+    out["corpus"] = cat.read_local("corpus_stats").to_pylist()[0]
     from pyspark.sql import functions as F
 
     post = cat.read(spark, "postings")

@@ -83,25 +83,43 @@ POSTINGS_SCHEMA = T.StructType(
     ]
 )
 
+# the committed postings table as read back: rows plus the tbucket
+# partition column of its ``tbucket=X`` directories
+POSTINGS_TABLE_SCHEMA = T.StructType(
+    [*POSTINGS_SCHEMA.fields, T.StructField("tbucket", T.IntegerType())]
+)
 
-def n_salts_expr(df_col, cfg: IndexConfig):
-    """Number of salt shards for a term with document frequency
-    `df_col` — 1 for tail terms, else ceil(df/threshold) rounded UP to
-    a power of two, capped at cfg.max_salts (itself a power of two).
+
+def n_salts_sql(cfg: IndexConfig, df: str = "df") -> str:
+    """SQL text of the number of salt shards for a term with document
+    frequency in column `df` — 1 for tail terms, else
+    ceil(df/threshold) rounded UP to a power of two, capped at
+    cfg.max_salts (itself a power of two).  The chain enumerates
+    powers only up to 32; a larger ratio falls through to max_salts.
 
     Power-of-two shard counts make every n_salts divide max_salts, so
     the query path can route posting rows onto a common doc-residue
     grid (doc_id mod D) and run MaxScore per residue class in parallel
     (operators/topk.py) — the query-side half of the skew story.
-    MUST stay bit-identical between build (salt_stage) and query."""
-    ratio = F.ceil(df_col / F.lit(cfg.salt_df_threshold))
-    expr = F.lit(cfg.max_salts)
-    for p in (32, 16, 8, 4, 2, 1):
-        if p <= cfg.max_salts:
-            expr = F.when(ratio <= p, F.lit(p)).otherwise(expr)
-    return F.when(df_col <= F.lit(cfg.salt_df_threshold), F.lit(1)).otherwise(
-        expr
-    ).cast("int")
+    The ONE definition behind build (``n_salts_expr``, salt_stage) and
+    query routing, so the two cannot drift."""
+    thr = int(cfg.salt_df_threshold)
+    whens = "".join(
+        f" WHEN ceil({df} / {thr}) <= {p} THEN {p}"
+        for p in (1, 2, 4, 8, 16, 32)
+        if p <= cfg.max_salts
+    )
+    return (
+        f"CAST(CASE WHEN {df} <= {thr} THEN 1{whens}"
+        f" ELSE {int(cfg.max_salts)} END AS INT)"
+    )
+
+
+def n_salts_expr(df_col, cfg: IndexConfig):
+    """``n_salts_sql`` as a Column; `df_col` is the df column's name or
+    a plain reference to it (``F.col("df")``)."""
+    name = df_col if isinstance(df_col, str) else df_col._jc.toString()
+    return F.expr(n_salts_sql(cfg, name))
 
 
 def tokenize_stage(
@@ -673,7 +691,7 @@ def merge_partials(
 
 
 def _n_salts_py(df: int, cfg: IndexConfig) -> int:
-    """Python twin of ``n_salts_expr`` — mirrors the EXPRESSION, not
+    """Python twin of ``n_salts_sql`` — mirrors the EXPRESSION, not
     just its intent: the when-chain enumerates powers of two only up
     to 32, so any ratio above 32 maps straight to max_salts (which
     matters when max_salts > 64: ratio 40 must give max_salts, not
@@ -783,9 +801,7 @@ def delta_merge_postings(
     )))
     merged_in = merged_in.repartition(n_part, "tbucket")
 
-    out_schema = T.StructType(
-        [*POSTINGS_SCHEMA.fields, T.StructField("tbucket", T.IntegerType())]
-    )
+    out_schema = POSTINGS_TABLE_SCHEMA
     thr, max_salts = cfg.salt_df_threshold, cfg.max_salts
 
     def run(batches):

@@ -8,11 +8,12 @@ SEARCH index's BM25(k1=1.2, b=0.75) (:933).
 
 Two physical strategies over the same logical plan
 (tokenize query → resolve term ids → pruned postings scan → score →
-global top-k):
+top-k per query):
 
 * **TAAT** (``mode="taat"``) — fully distributed: each posting row
-  decodes + scores itself in ``mapInPandas`` (pure numpy), partials
-  shuffle on (qid, doc_id), ``groupBy().sum()`` merges, window top-k.
+  decodes + scores itself in ``mapInPandas`` (pure numpy) and fans out
+  to its queries through the driver's term_id → [qid] dict; partials
+  shuffle on (qid, doc_id), ``groupBy().sum()`` merges, then ranks.
   Exhaustive and embarrassingly parallel — the 10^12-doc scan path.
 * **MaxScore** (``mode="maxscore"``) — WAND-family dynamic pruning,
   parallelized over DOC-RESIDUE classes: every posting row is routed
@@ -22,7 +23,7 @@ global top-k):
   {s, s+n, s+2n, …}; tail rows replicate to all D residues).  Each
   (query, residue) group holds the COMPLETE postings of its docs, so
   it runs an independent MaxScore with a local threshold θ and returns
-  a local top-k; a tiny window merge produces the global top-k — exact,
+  a local top-k; a tiny merge produces the global top-k — exact,
   because every doc's full score lives in exactly one group.  Head-term
   volume therefore splits D ways instead of concentrating in one task
   (the round-1 design shipped ALL salt shards of a query to ONE task).
@@ -35,16 +36,32 @@ global top-k):
   codec gives positional access from the prefix stream alone
   (operators/codec.py:decode_u64_at).
 
-Both produce rank-identical results (ties broken by ascending
-doc_id) — asserted against the pure-Python exhaustive oracle in
-tests (FIXTURES.md §5 #5).
+Query terms reach the plan as LITERALS, not as a joined DataFrame: the
+scan filter is ``tbucket IN (…) AND term_id IN (…)`` and MaxScore's
+scan projection routes each posting row to its queries with
+``explode(CASE term_id WHEN <id>L THEN array(<qids>) … END) AS qid``,
+so no driver-side frame is parallelized and broadcast per query.  The
+filter, routing, residue grid and ranking are SQL strings (one
+driver→JVM call each, where a Column-built expression costs tens).
+
+Ranking (``_rank``) has two branches with the same rows: a one-query
+batch (one distinct qid among the analyzed terms) takes a global
+``orderBy(score DESC, doc_id ASC).limit(k)`` — one TakeOrdered, no
+exchange — and numbers it with an unpartitioned ``row_number``; a
+multi-query batch ranks with a ``row_number`` window partitioned by
+qid.  A one-query MaxScore search thus runs in two Spark jobs (the
+residue exchange's map stage, then kernel + TakeOrdered).
+
+Both strategies produce rank-identical results (ties broken by
+ascending doc_id) — asserted against the pure-Python exhaustive oracle
+in tests (FIXTURES.md §5 #5), for one-query and multi-query batches.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..config import IndexConfig
 from ..sources.catalog import Catalog
@@ -57,7 +74,7 @@ from .codec import (
     delta_decode_blocked,
     delta_decode_blocks_at,
 )
-from .postings import n_salts_expr
+from .postings import POSTINGS_TABLE_SCHEMA, n_salts_sql
 from .xxhash import xxh64_str
 
 PARTIAL_SCHEMA = T.StructType(
@@ -85,6 +102,38 @@ def _bm25(tfs, dls, df, n_docs, avgdl, k1, b) -> np.ndarray:
     return idf * (t * (k1 + 1.0)) / (t + k1 * (1.0 - b + b * d / avgdl))
 
 
+def _rank(partial: DataFrame, k: int, single: bool) -> DataFrame:
+    """Top-k (qid, doc_id, score, rank) per qid of scored partials by
+    (score DESC, doc_id ASC) — the order the oracle ranks by.  A
+    one-query batch (``single``) ranks with a global sort + limit: one
+    TakeOrdered instead of an exchange, sort and window, numbered by an
+    unpartitioned ``row_number`` over its k rows.  Any other batch
+    ranks with a window partitioned by qid."""
+    if single:
+        return (
+            partial.orderBy("score", "doc_id", ascending=[False, True])
+            .limit(k)
+            .selectExpr(
+                "qid", "doc_id", "score",
+                "row_number() OVER (ORDER BY score DESC, doc_id) AS rank",
+            )
+        )
+    return partial.selectExpr(
+        "qid", "doc_id", "score",
+        "row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id)"
+        " AS rank",
+    ).filter(f"rank <= {k}")
+
+
+def _routes(qterms: pd.DataFrame) -> dict[int, list[int]]:
+    """term_id → [qid] of every query holding the term — the one
+    term→query routing map behind both modes."""
+    routes: dict[int, list[int]] = {}
+    for t, q in zip(qterms["term_id"], qterms["qid"]):
+        routes.setdefault(int(t), []).append(int(q))
+    return routes
+
+
 class InvertedIndex:
     """Handle over a built index directory."""
 
@@ -95,12 +144,15 @@ class InvertedIndex:
         self.spark = spark
         self.cat = Catalog(index_dir)
         self.cfg = cfg or IndexConfig()
-        self._postings_name = POSTINGS
-        row = self.cat.read(spark, CORPUS).collect()[0]
+        # the one-row corpus scalars, read driver-side: no Spark job
+        row = self.cat.read_local(CORPUS).to_pylist()[0]
         self.n_docs = int(row["n_docs"])
         self.avgdl = float(row["avgdl"] or 1.0)
-        # one parquet listing per handle, not per query
-        self._post_df = self.cat.read(spark, self._postings_name)
+        # one parquet listing per handle, not per query; the known
+        # schema spares the footer-inference job a bare read runs
+        self._post_df = spark.read.schema(POSTINGS_TABLE_SCHEMA).parquet(
+            self.cat.path(POSTINGS)
+        )
 
     # ---------------------------------------------------------- helpers
 
@@ -115,22 +167,15 @@ class InvertedIndex:
                 rows.append((int(qid), term, xxh64_str(term)))
         return pd.DataFrame(rows, columns=["qid", "term", "term_id"])
 
-    def _matched_postings(self, qterms: pd.DataFrame) -> DataFrame:
+    def _matched_postings(self, term_ids) -> DataFrame:
         """Postings rows for the query terms, with static tbucket/file
         pruning (the partition-pruning the reference gets from its
-        project-scoped composite indexes, surql:843-849)."""
-        term_ids = [int(t) for t in qterms["term_id"].unique()]
+        project-scoped composite indexes, surql:843-849).  The ids are
+        SQL literals, so the filter reaches the parquet scan as-is."""
         buckets = sorted({t % self.cfg.term_buckets for t in term_ids})
-        post = self._post_df
-        return post.filter(
-            F.col("tbucket").isin(buckets) & F.col("term_id").isin(term_ids)
-        )
-
-    def _qdf(self, qterms: pd.DataFrame) -> DataFrame:
-        qmap = qterms.groupby("term_id")["qid"].agg(list).to_dict()
-        return self.spark.createDataFrame(
-            [(int(t), int(q)) for t, qs in qmap.items() for q in qs],
-            "term_id long, qid int",
+        return self._post_df.filter(
+            f"tbucket IN ({', '.join(map(str, buckets))})"
+            f" AND term_id IN ({', '.join(f'{t}L' for t in term_ids)})"
         )
 
     # ------------------------------------------------------------- TAAT
@@ -139,12 +184,10 @@ class InvertedIndex:
         n_docs, avgdl = self.n_docs, self.avgdl
         k1, b = self.cfg.k1, self.cfg.b
         block = self.cfg.block_size
-        # (term_id → [qids]) map is tiny: broadcast-join in pandas space
-        tid_to_qids: dict[int, list[int]] = {}
-        for _, r in qterms.iterrows():
-            tid_to_qids.setdefault(int(r["term_id"]), []).append(int(r["qid"]))
-
-        matched = self._matched_postings(qterms)
+        # the term → [qid] map is tiny: it ships inside the closure and
+        # each scored posting row fans out to its queries in pandas
+        routes = _routes(qterms)
+        matched = self._matched_postings(routes)
 
         def score(batches):
             for pdf in batches:
@@ -156,7 +199,7 @@ class InvertedIndex:
                     tfs = decode_u32(bytes(r.tf_payload))
                     dls = decode_u32(bytes(r.dl_payload))
                     sc = _bm25(tfs, dls, int(r.df), n_docs, avgdl, k1, b)
-                    for qid in tid_to_qids.get(int(r.term_id), ()):
+                    for qid in routes.get(int(r.term_id), ()):
                         out_q.append(np.full(len(docs), qid, dtype=np.int32))
                         out_d.append(docs)
                         out_s.append(sc)
@@ -170,13 +213,8 @@ class InvertedIndex:
                     )
 
         partials = matched.mapInPandas(score, schema=PARTIAL_SCHEMA)
-        agg = partials.groupBy("qid", "doc_id").agg(F.sum("score").alias("score"))
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-        return (
-            agg.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "doc_id", "score", "rank")
-        )
+        agg = partials.groupBy("qid", "doc_id").agg(F.expr("sum(score) AS score"))
+        return _rank(agg, k, qterms["qid"].nunique() == 1)
 
     # --------------------------------------------------------- MaxScore
 
@@ -186,7 +224,14 @@ class InvertedIndex:
         n_docs, avgdl = self.n_docs, self.avgdl
         k1, b = self.cfg.k1, self.cfg.b
         block = self.cfg.block_size
-        matched = self._matched_postings(qterms)
+        if residues == "max":
+            d = str(int(self.cfg.max_salts))
+        elif residues == "adaptive":
+            d = "max(n_salts) OVER (PARTITION BY qid)"
+        else:
+            raise ValueError(f"unknown residues strategy {residues!r}")
+        routes = _routes(qterms)
+        matched = self._matched_postings(routes)
 
         def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             qid, g = int(key[0]), int(key[1])
@@ -304,26 +349,27 @@ class InvertedIndex:
         #                and skipping the aggregation pass wins latency —
         #                measured p50 1.30s vs 1.55s at 20k docs);
         #   "adaptive" — D = max matched n_salts per qid (tight
-        #                replication; one extra aggregation over the
+        #                replication; one extra window exchange over the
         #                pruned scan — for very large max_salts configs).
-        pq = matched.join(F.broadcast(self._qdf(qterms)), "term_id")
-        pq = pq.withColumn("n_salts", n_salts_expr(F.col("df"), self.cfg))
-        if residues == "max":
-            pq = pq.withColumn("D", F.lit(int(self.cfg.max_salts)))
-        elif residues == "adaptive":
-            d_per_q = pq.groupBy("qid").agg(F.max("n_salts").alias("D"))
-            pq = pq.join(F.broadcast(d_per_q), "qid")
-        else:
-            raise ValueError(f"unknown residues strategy {residues!r}")
-        pq = pq.withColumn(
-            "rep",
-            F.explode(
-                F.sequence(
-                    F.lit(0), (F.col("D") / F.col("n_salts")).cast("int") - 1
-                )
-            ),
-        ).withColumn(
-            "g", (F.col("salt") + F.col("rep") * F.col("n_salts")).cast("int")
+        # The scan projection fans each row out to its queries with a
+        # literal CASE over term_id; a head shard (salt s, n_salts n)
+        # then serves residues g = s + rep·n for rep < D/n.
+        whens = " ".join(
+            f"WHEN {t}L THEN array({', '.join(map(str, qs))})"
+            for t, qs in routes.items()
+        )
+        pq = (
+            matched.selectExpr(
+                "*",
+                f"explode(CASE term_id {whens} END) AS qid",
+                f"{n_salts_sql(self.cfg)} AS n_salts",
+            )
+            .selectExpr("*", f"{d} AS D")
+            .selectExpr(
+                "*",
+                "explode(transform(sequence(0, CAST(D / n_salts AS INT) - 1),"
+                " rep -> salt + rep * n_salts)) AS g",
+            )
         )
         # explicit AQE-exempt partitioning: the groups are CPU-bound
         # Python; byte-based coalescing would serialize them into one
@@ -349,12 +395,7 @@ class InvertedIndex:
                     yield out
 
         partial = pq.mapInPandas(run_part, schema=PARTIAL_SCHEMA)
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-        return (
-            partial.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "doc_id", "score", "rank")
-        )
+        return _rank(partial, k, qterms["qid"].nunique() == 1)
 
     # ------------------------------------------------------------- API
 

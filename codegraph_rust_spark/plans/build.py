@@ -170,7 +170,7 @@ def derived_stages(
         # resume path only: the fresh build computes these scalars via
         # an Observation riding the tokenize write (build_index)
         timed(CORPUS, lambda: cat.write(tokenized.agg(*CORPUS_AGGS()), CORPUS))
-    stats_row = corpus_row or cat.read(spark, CORPUS).collect()[0]
+    stats_row = corpus_row or cat.read_local(CORPUS).to_pylist()[0]
     n_docs, avgdl = int(stats_row["n_docs"]), float(stats_row["avgdl"] or 0.0)
     metrics["n_docs"], metrics["avgdl"] = n_docs, avgdl
 

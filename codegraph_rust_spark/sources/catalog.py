@@ -90,6 +90,18 @@ class Catalog:
         os.replace(tmp, p)
         shutil.rmtree(old, ignore_errors=True)
 
+    def read_local(self, name: str):
+        """Read a committed catalog table into a DRIVER-LOCAL pyarrow
+        Table — the reader twin of ``write_local`` for the same
+        control-plane tables.  ``spark.read.parquet(...).collect()``
+        costs two Spark jobs (schema inference, then the collect);
+        pyarrow reads a one-row table in milliseconds.  Files starting
+        with ``_`` or ``.`` (commit marker, checksums, in-progress
+        parts) are not data, as for Spark's reader."""
+        import pyarrow.parquet as pq
+
+        return pq.read_table(self.path(name), ignore_prefixes=["_", "."])
+
     def write_arrow_direct(
         self,
         df: DataFrame,

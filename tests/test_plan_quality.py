@@ -133,6 +133,39 @@ def test_hnsw_layered_hops_are_broadcast_lookups(spark):
         _assert_hops_broadcast(spark, "layered", n_queries)
 
 
+def test_one_query_maxscore_is_two_spark_jobs(spark, tiny_index):
+    """A one-query MaxScore search routes term → qid with a literal
+    CASE in the scan projection and ranks with a global sort + limit:
+    no parallelized query-terms frame (``Scan ExistingRDD``), no
+    broadcast of it, and at most two Spark jobs when collected (the
+    residue exchange's map stage, then kernel + TakeOrdered).  A
+    three-query batch still ranks with a window partitioned by qid."""
+    import re
+
+    from codegraph_rust_spark.operators.topk import InvertedIndex
+
+    idx = InvertedIndex(spark, tiny_index["dir"], tiny_index["cfg"])
+    one = idx.topk_batch([(0, "running searches")], k=10, mode="maxscore")
+    p = _plan(one)
+    assert "BroadcastExchange" not in p
+    assert "Scan ExistingRDD" not in p
+    sc = spark.sparkContext
+    group = "one-query-maxscore-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        assert one.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+    three = idx.topk_batch(
+        [(0, "running searches"), (1, "index merge"), (2, "search")],
+        k=10, mode="maxscore",
+    )
+    assert re.search(r"Window \[row_number\(\) windowspecdefinition\(qid#",
+                     _plan(three))
+
+
 def test_nsw_lsh_graph_build_has_no_quadratic_join(spark):
     """The web-scale NSW graph builder must generate candidates via
     bucketed equi-joins (LSH bands, NN-descent key joins) only — a

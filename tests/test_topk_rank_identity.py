@@ -14,13 +14,13 @@ from codegraph_rust_spark.operators.oracle import load_queries, oracle_topk
 from codegraph_rust_spark.operators.topk import InvertedIndex
 
 
-@pytest.fixture(scope="module")
-def oracle_results(spark, tiny_index):
-    # oracle input: (doc_id, text) with the SAME doc ids as the index
-    # (hash ids come from the tokenized ledger — the docs view's
-    # backing table; text from the corpus parquet)
-    d = tiny_index["dir"]
-    corpus = tiny_index["corpus"]
+def _golden(index):
+    """(queries, oracle top-10 per qid) over an index fixture's corpus.
+    Oracle input: (doc_id, text) with the SAME doc ids as the index
+    (hash ids come from the tokenized ledger — the docs view's backing
+    table; text from the corpus parquet)."""
+    d = index["dir"]
+    corpus = index["corpus"]
     con = duckdb.connect()
     rows = con.execute(
         f"""
@@ -32,8 +32,12 @@ def oracle_results(spark, tiny_index):
     ).fetchall()
     assert len(rows) == 1000
     queries = load_queries(os.path.join(corpus, "queries.tsv"))
-    golden = oracle_topk(rows, queries, k=10, cfg=tiny_index["cfg"])
-    return queries, golden
+    return queries, oracle_topk(rows, queries, k=10, cfg=index["cfg"])
+
+
+@pytest.fixture(scope="module")
+def oracle_results(spark, tiny_index):
+    return _golden(tiny_index)
 
 
 def _check(result_rows, golden, queries):
@@ -89,24 +93,27 @@ def test_maxscore_adaptive_residues_rank_identical(spark, salted_index):
     strategies route the same postings onto different residue grids
     but may never disagree on scores (topk.py adaptive branch)."""
     d = salted_index["dir"]
-    corpus = salted_index["corpus"]
-    con = duckdb.connect()
-    rows = con.execute(
-        f"""
-        select d.doc_id, p.text
-        from (select doc_id, url
-              from '{os.path.join(d, "tokenized", "*.parquet")}') d
-        join '{os.path.join(corpus, "pages.parquet", "*.parquet")}' p using (url)
-        """
-    ).fetchall()
-    queries = load_queries(os.path.join(corpus, "queries.tsv"))
-    golden = oracle_topk(rows, queries, k=10, cfg=salted_index["cfg"])
+    queries, golden = _golden(salted_index)
     idx = InvertedIndex(spark, d, salted_index["cfg"])
     for residues in ("max", "adaptive"):
         got = idx.topk_batch(
             queries, k=10, mode="maxscore", residues=residues
         ).collect()
         _check(got, golden, queries)
+
+
+def test_one_query_batches_rank_identical(spark, tiny_index, salted_index):
+    """Every reference query run ALONE — a one-query batch takes the
+    global sort + limit ranking branch (topk._rank), which the
+    multi-query gates above never reach — is rank-identical to the
+    oracle in both modes, on the default and the 64-salt index."""
+    for index in (tiny_index, salted_index):
+        queries, golden = _golden(index)
+        idx = InvertedIndex(spark, index["dir"], index["cfg"])
+        for mode in ("taat", "maxscore"):
+            for qid, q in queries:
+                rows = idx.topk_batch([(qid, q)], k=10, mode=mode).collect()
+                _check(rows, golden, [(qid, q)])
 
 
 def test_oov_query_returns_empty(spark, tiny_index):
