@@ -19,33 +19,9 @@ import shutil
 import sys
 import time
 
-os.environ.setdefault("MALLOC_ARENA_MAX", "2")
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-REPO = os.path.dirname(os.path.abspath(__file__))
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-N_DOCS = int(os.environ.get("BENCH_DOCS", "100000"))
-
-
-def get_spark(cpus: int = CPUS):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("codegraph_rust_spark-bench-extra")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.python.worker.reuse", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("BENCH_DRIVER_MEM", "48g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", os.environ.get("BENCH_UI", "false"))
-        .config("spark.executorEnv.PYTHONPATH", REPO)
-        .getOrCreate()
-    )
+from bench import CPUS, N_DOCS, REPO, SF_DIR, get_spark  # noqa: E402
 
 
 def noop(df):
@@ -187,7 +163,7 @@ def dump_plans(spark, names, tag="before"):
 
 def main():
     mode = sys.argv[1] if len(sys.argv) > 1 else "ops"
-    spark = get_spark()
+    spark = get_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     if mode == "index":
         dissect_index(spark)

@@ -4,35 +4,26 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from .qcache import DERIVED
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-_MAX_KEY_CACHE: dict[tuple[str, str, str, str], int] = {}
-
-
 def max_key(spark: SparkSession, sf_dir: str, name: str, col: str) -> int:
     """max(col) over a source table, cached per (app, sf_dir, table,
-    col).
+    col) at the table file's snapshot (qcache.DERIVED).
 
     The synthetic edge graphs derive their modulus from the key-space
     size; without the cache every graph entry re-scanned the whole
-    column per call.  Source tables are immutable inputs (the driver's
-    parquet snapshots), so caching the scalar is safe — keying by
-    applicationId (like nsw's graph cache) bounds it to one session
-    anyway — and at real scale this is a table-statistics lookup, not
-    a scan."""
-    app = spark.sparkContext.applicationId
-    k = (app, sf_dir, name, col)
-    if k not in _MAX_KEY_CACHE:
-        # evict keys from dead sessions (known-useless by construction)
-        for stale in [x for x in _MAX_KEY_CACHE if x[0] != app]:
-            del _MAX_KEY_CACHE[stale]
-        from pyspark.sql import functions as F
-
-        row = t(spark, sf_dir, name).agg(F.max(col)).collect()[0]
-        _MAX_KEY_CACHE[k] = row[0] or 0
-    return _MAX_KEY_CACHE[k]
+    column per call.  At real scale this is a table-statistics lookup,
+    not a scan."""
+    return DERIVED.get_or_compute(
+        spark,
+        ("max_key", sf_dir, name, col),
+        [os.path.join(sf_dir, f"{name}.parquet")],
+        lambda: t(spark, sf_dir, name).agg(F.max(col)).collect()[0][0] or 0,
+    )

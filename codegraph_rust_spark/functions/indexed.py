@@ -9,18 +9,22 @@ equivalent DataFrame expression — produces the reference semantics
 side decodes compressed posting payloads; the oracle recomputes from
 raw text.
 
-The index is built once per sf_dir into a cache directory (resume=True
-makes repeat calls a metadata check); the ``simple`` analyzer is used
-so DuckDB can replay tokenization exactly.
+The index is built once per source snapshot into a cache directory
+(``ensure_doc_index``; resume=True makes repeat calls a metadata
+check); the ``simple`` analyzer is used so DuckDB can replay
+tokenization exactly.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..config import IndexConfig
+from .qcache import mtime_ns
 from .textops import (
     BM25_QUERY_TERMS,
     BM25_TOPK_SQL,
@@ -45,15 +49,33 @@ def _doc_index_cfg() -> IndexConfig:
     )
 
 
+def _digest(x) -> str:
+    return hashlib.sha1(repr(x).encode()).hexdigest()[:16]
+
+
 def ensure_doc_index(spark: SparkSession, sf_dir: str) -> tuple[str, IndexConfig]:
-    """Build (or reuse) the postings index over ``documents`` at sf_dir."""
+    """Build (or reuse) the postings index over ``documents`` at sf_dir.
+
+    The index directory is named by its source's identity, a digest of
+    (abspath(sf_dir), documents.parquet's snapshot token, _CACHE_TAG),
+    behind a prefix digest of the abspath alone: two sources sharing a
+    basename get separate indexes, a ``documents`` rewritten in place
+    gets a fresh one, and building it removes the same source's stale
+    snapshots (the siblings under that prefix)."""
     from ..plans.build import build_index
     from .common import t
 
     cfg = _doc_index_cfg()
     repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    index_dir = os.path.join(repo, ".data", f"docidx_{_CACHE_TAG}_{tag}")
+    root = os.path.join(repo, ".data")
+    src = os.path.abspath(sf_dir)
+    prefix = f"docidx_{_digest(src)}_"
+    token = mtime_ns(os.path.join(src, "documents.parquet"))
+    index_dir = os.path.join(root, prefix + _digest((src, token, _CACHE_TAG)))
+    if not os.path.isdir(index_dir) and os.path.isdir(root):
+        for name in os.listdir(root):
+            if name.startswith(prefix):
+                shutil.rmtree(os.path.join(root, name), ignore_errors=True)
     pages = t(spark, sf_dir, "documents").select("doc_id", "text")
     build_index(spark, pages, index_dir, cfg, resume=True)
     return index_dir, cfg

@@ -42,6 +42,7 @@ and return the same cosines to 6 decimals.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import numpy as np
@@ -49,6 +50,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .common import t
+from .qcache import DERIVED, SERVICE_CACHE
 
 NSW_M = 8      # neighbors kept per node (reference HNSW M 12)
 NSW_EF = 16    # beam width (reference EFC 150; scaled to the test SF)
@@ -67,13 +69,6 @@ NSW_K = 5
 # turn a measurable (if slow) round into a crashed one on corpora r5
 # handled.
 NSW_EXACT_MAX_ROWS = int(os.environ.get("NSW_EXACT_MAX_ROWS", "200000"))
-
-# applicationId → broadcasts created by _nsw_edges (destroyed when a
-# later build sees the application is gone; within a live app only the
-# newest _EXACT_BCASTS_KEEP stay executor-resident — older ones are
-# unpersisted and re-ship on demand — see _nsw_edges docstring)
-_EXACT_BCASTS: dict[str, list] = {}
-_EXACT_BCASTS_KEEP = 8
 
 # pair cosine with the norms HOISTED to per-vector columns: the same
 # float64 values in the same division, just not recomputed per pair —
@@ -162,18 +157,14 @@ def _nsw_edges(e: DataFrame) -> DataFrame:
     builder IS the path — enforced by a LOUD row-count guard
     (NSW_EXACT_MAX_ROWS) rather than an OOM.  The collect and the
     broadcast happen at CONSTRUCTION time and the broadcast must
-    outlive the lazy frame, so it lives for the session — but each
-    build registers its broadcast per-application and builds for DEAD
-    applications are destroyed on the next construction (the leak the
-    round-4 advice flagged for repeated uncached builds)."""
+    outlive the lazy frame, so it is a qcache.DERIVED entry keyed by a
+    digest of its contents: repeated builds over the same vectors share
+    one broadcast, and the cache's one eviction policy bounds how many
+    stay executor-resident (the leak the round-4 advice flagged for
+    repeated uncached builds).  Eviction only ``unpersist``s: the
+    driver re-ships the value if an older lazy frame is re-executed,
+    where ``destroy`` would break it."""
     spark = e.sparkSession
-    app = spark.sparkContext.applicationId
-    for stale in [a for a in _EXACT_BCASTS if a != app]:
-        for old in _EXACT_BCASTS.pop(stale):
-            try:
-                old.destroy()
-            except Exception:
-                pass  # session already gone — blocks are freed anyway
     # single job: the limit bounds the driver collect to MAX+1 rows (a
     # separate count() would evaluate the whole upstream plan twice)
     rows = e.select("vec_id", "embedding").limit(NSW_EXACT_MAX_ROWS + 1).collect()
@@ -192,18 +183,14 @@ def _nsw_edges(e: DataFrame) -> DataFrame:
     order = np.argsort(ids)
     ids, mat = ids[order], mat[order]
     unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((ids, unit))
-    live = _EXACT_BCASTS.setdefault(app, [])
-    live.append(bc)
-    # bound WITHIN-app growth too (repeated uncached builds): keep the
-    # newest few, unpersist() the rest — unpersist only drops executor
-    # copies; the driver re-ships the value if an older lazy frame is
-    # ever re-executed, so this is safe where destroy() would not be
-    while len(live) > _EXACT_BCASTS_KEEP:
-        try:
-            live.pop(0).unpersist(False)
-        except Exception:
-            pass
+    digest = hashlib.sha1(ids.tobytes() + unit.tobytes()).hexdigest()
+    bc = DERIVED.get_or_compute(
+        spark,
+        ("nsw_exact_bcast", digest),
+        [],
+        lambda: spark.sparkContext.broadcast((ids, unit)),
+        lambda old: old.unpersist(False),
+    )
 
     def run(batches):
         import pyarrow as pa
@@ -341,44 +328,23 @@ def _nsw_edges_lsh(e: DataFrame) -> DataFrame:
     return top_m(score_pairs(cand2))
 
 
-
-# (applicationId, sf_dir, builder) → materialized edges.  The
-# proximity graph IS the index: the reference builds its HNSW graph at
-# INDEX time and answers every query against it (surql:815-823), so
-# rebuilding it per search call would misstate the engine's query
-# latency.  Source tables are immutable driver snapshots; keying by
-# applicationId keeps a restarted session from seeing another
-# session's (invalid) checkpoint handles.
-_GRAPH_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _data_token(sf_dir: str) -> int:
-    """st_mtime_ns of the embeddings parquet — the source-data snapshot
-    component of every NSW cache key, so a file rewritten in place
-    within one application invalidates both the graph cache and the
-    result cache (review r6: keying only the result cache left beam
-    searches traversing a stale graph)."""
-    try:
-        return os.stat(os.path.join(sf_dir, "embeddings.parquet")).st_mtime_ns
-    except OSError:
-        return -1  # directory-style sources: fall back to app scope
-
-
 def _cached_graph(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    k = (app, sf_dir, name, _data_token(sf_dir))
-    if k not in _GRAPH_CACHE:
-        # evict entries pinned to dead sessions (their checkpoint
-        # handles are invalid by construction — see keying rationale)
-        # and stale data snapshots of the same (app, sf_dir, name)
-        for stale in [x for x in _GRAPH_CACHE if x[0] != app or x[:3] == k[:3]]:
-            del _GRAPH_CACHE[stale]
-        # lazy checkpoint: plan is truncated at construction (the
-        # returned frame wraps the checkpointed RDD) without the
-        # count() job an eager checkpoint adds; the materialized RDD
-        # is reused by every later hop / query in the session
-        _GRAPH_CACHE[k] = build().localCheckpoint(eager=False)
-    return _GRAPH_CACHE[k]
+    """The ``name`` proximity graph over sf_dir, built once per session
+    and snapshot of the embeddings file (qcache.DERIVED).  The graph IS
+    the index: the reference builds its HNSW graph at INDEX time and
+    answers every query against it (surql:815-823), so rebuilding it
+    per search call would misstate the engine's query latency.
+
+    Lazy checkpoint: the plan is truncated at construction (the frame
+    wraps the checkpointed RDD) without the count() job an eager
+    checkpoint adds; every later hop / query reuses the materialized
+    RDD."""
+    return DERIVED.get_or_compute(
+        spark,
+        ("nsw_graph", sf_dir, name),
+        [os.path.join(sf_dir, "embeddings.parquet")],
+        lambda: build().localCheckpoint(eager=False),
+    )
 
 
 _GRAPH_BUILDERS = {"exact": _nsw_edges, "lsh": _nsw_edges_lsh}
@@ -565,28 +531,15 @@ def nsw_search_batch_cached(
 ) -> list:
     """The daemon-shaped entry point: ``nsw_search_batch`` behind the
     process-wide query-result LRU+TTL cache (qcache.py — reference
-    graph_tool_executor.rs:299-322).  A repeated (snapshot, queries,
-    k) within the TTL returns the collected rows with ZERO Spark jobs.
-    Snapshot token = (applicationId, sf_dir, kind, source-data
-    mtime_ns): the graph cache is immutable per session, and the
-    mtime_ns of the embeddings parquet guards the remaining hole —
-    source data rewritten in place within one application (tmp-dir
-    reuse, corpus regeneration) can no longer serve stale rows for a
-    TTL (advice r5)."""
-    from .qcache import SERVICE_CACHE
-
-    data_token = _data_token(sf_dir)
-    key = (
-        "nsw_search_batch",
-        spark.sparkContext.applicationId,
-        sf_dir,
-        kind,
-        data_token,
-        tuple(qids),
-        k,
-    )
+    graph_tool_executor.rs:299-322).  A repeated (sf_dir, kind, queries,
+    k) within the TTL returns the collected rows with ZERO Spark jobs;
+    the key's embeddings-file snapshot token makes a file rewritten in
+    place miss, like the graph cache behind it."""
     return SERVICE_CACHE.get_or_compute(
-        key, lambda: nsw_search_batch(spark, sf_dir, qids, kind=kind, k=k).collect()
+        spark,
+        ("nsw_search_batch", sf_dir, kind, tuple(qids), k),
+        [os.path.join(sf_dir, "embeddings.parquet")],
+        lambda: nsw_search_batch(spark, sf_dir, qids, kind=kind, k=k).collect(),
     )
 
 

@@ -1,90 +1,116 @@
-"""Query-result LRU cache with TTL — the service-layer memoization of
-the reference's MCP daemon, which caches (project, tool, params) →
-result for 5 minutes
+"""One snapshot-keyed cache for every piece of derived driver state.
+
+The reference keys derived state to the identity of its source: its
+parse cache by mtime + SHA-256 (parser.rs:319-402), its MCP daemon's
+results per (project, tool, params) with a 5-minute TTL
 (crates/codegraph-mcp-tools/src/graph_tool_executor.rs:299-322).
+``SnapshotCache`` is that one mechanism here, with two instances:
 
-The session-level graph/index caches (nsw._GRAPH_CACHE,
-indexed.ensure_doc_index) memoize the INDEX; this memoizes the
-ANSWER: a repeated query in a long-lived query service (the
-nsw_search_batch / topk_batch daemon role) returns collected rows
-without launching a single Spark job.
+* ``SERVICE_CACHE`` memoizes ANSWERS — collected query rows of the
+  daemon-shaped entry points (``nsw_search_batch_cached``,
+  ``InvertedIndex.topk_batch_cached``): a repeated query returns
+  without launching a Spark job.  300 s TTL, 128 entries.
+* ``DERIVED`` memoizes the state queries are answered FROM — max-key
+  scalars, the persisted BM25 tf/dl frames, NSW graph checkpoints and
+  the exact builder's broadcasts.  No TTL; ``DERIVED_MAX_ENTRIES``
+  entries.
 
-Design points:
+The stored key is ``(applicationId, *key, token)``; the token is the
+``st_mtime_ns`` of each source path (-1 when missing), so a source
+rewritten in place, or a rebuilt index ledger, misses instead of
+serving stale state.  One policy drops an entry, calling its
+``release(value)`` exactly once (errors from a dead session are
+swallowed — its blocks are gone anyway), when:
 
-* **Snapshot-keyed.** Every key carries an index-snapshot token
-  (applicationId + sf_dir/index_dir + builder kind here) so a rebuilt
-  or respliced index can never serve stale hits — same reason the
-  reference invalidates per project.
-* **TTL + LRU.** TTL bounds staleness against out-of-band data
-  changes (reference: 300 s); LRU bounds memory.  The clock is
-  injectable so expiry is TESTED, not assumed.
-* **Stores materialized rows only** (list of Row/tuples) — a cached
-  DataFrame would pin lineage and executors; a result cache must
-  outlive neither.
+1. its application is not the caller's (a stopped session's handles
+   are invalid by construction);
+2. a newer token is stored for the same key (the old snapshot can
+   never hit again);
+3. it falls off the LRU end past ``max_entries``.
+
+With a TTL, an entry older than it misses and is replaced (and
+released).  Values are shared, not copied: callers treat returned
+rows as frozen.  The clock is injectable so expiry is tested, not
+assumed.
 """
 
 from __future__ import annotations
 
+import os
 import time
 from collections import OrderedDict
-from typing import Any, Callable, Hashable
+from typing import Any, Callable, Hashable, Iterable
 
 DEFAULT_TTL_S = 300.0  # reference daemon's 5-minute TTL
 DEFAULT_MAX_ENTRIES = 128
+# >= the 10 derived entries one registry sweep over one sf_dir creates
+# (2 max_key scalars, 1 BM25 tf/dl pair, 4 NSW graphs, 3 exact-graph
+# broadcasts), so a sweep never rebuilds a graph it already built
+DERIVED_MAX_ENTRIES = 32
 
 
-class QueryResultCache:
+def mtime_ns(path: str) -> int:
+    try:
+        return os.stat(path).st_mtime_ns
+    except OSError:
+        return -1
+
+
+class SnapshotCache:
     def __init__(
         self,
         max_entries: int = DEFAULT_MAX_ENTRIES,
-        ttl_s: float = DEFAULT_TTL_S,
+        ttl_s: float | None = DEFAULT_TTL_S,
         clock: Callable[[], float] = time.monotonic,
     ) -> None:
         self.max_entries = max_entries
         self.ttl_s = ttl_s
         self.clock = clock
-        self._d: OrderedDict[Hashable, tuple[float, Any]] = OrderedDict()
+        # stored key → (stored at, value, release)
+        self._d: OrderedDict[tuple, tuple[float, Any, Callable | None]] = OrderedDict()
         self.hits = 0
         self.misses = 0
 
-    def get_or_compute(self, key: Hashable, compute: Callable[[], Any]) -> Any:
-        """NO-MUTATION CONTRACT: the SAME object is returned to every
-        caller within the TTL (zero-copy hits are the point of a
-        result cache) — callers must treat returned rows as frozen;
-        mutating them would corrupt later hits (advice r5).  All
-        in-repo callers only iterate/serialize results."""
+    def get_or_compute(
+        self,
+        spark,
+        key: tuple[Hashable, ...],
+        sources: Iterable[str],
+        compute: Callable[[], Any],
+        release: Callable[[Any], Any] | None = None,
+    ) -> Any:
+        """The value for ``key`` at the sources' current snapshot —
+        from cache, or ``compute()`` stored with ``release``.  With
+        ``spark`` None the entry belongs to no application."""
+        app = spark.sparkContext.applicationId if spark is not None else None
+        full = (app, *key, tuple(mtime_ns(p) for p in sources))
         now = self.clock()
-        hit = self._d.get(key)
-        if hit is not None and now - hit[0] < self.ttl_s:
-            self._d.move_to_end(key)  # LRU touch
+        hit = self._d.get(full)
+        if hit is not None and (self.ttl_s is None or now - hit[0] < self.ttl_s):
+            self._d.move_to_end(full)  # LRU touch
             self.hits += 1
             return hit[1]
         self.misses += 1
+        # release dead-session and superseded entries BEFORE computing,
+        # so their storage is free for the rebuild
+        for k in [k for k in self._d if k[0] != app or k[:-1] == full[:-1]]:
+            self._drop(k)
         value = compute()
-        self._d[key] = (now, value)
-        self._d.move_to_end(key)
+        self._d[full] = (now, value, release)
         while len(self._d) > self.max_entries:
-            self._d.popitem(last=False)
+            self._drop(next(iter(self._d)))
         return value
 
-    def invalidate(self, prefix: tuple | None = None) -> int:
-        """Drop everything (prefix=None) or every key whose leading
-        elements equal ``prefix`` — e.g. all results for one index
-        snapshot after an incremental splice."""
-        if prefix is None:
-            n = len(self._d)
-            self._d.clear()
-            return n
-        doomed = [
-            k
-            for k in self._d
-            if isinstance(k, tuple) and k[: len(prefix)] == prefix
-        ]
-        for k in doomed:
-            del self._d[k]
-        return len(doomed)
+    def _drop(self, k: tuple) -> None:
+        _, value, release = self._d.pop(k)
+        if release is not None:
+            try:
+                release(value)
+            except Exception:
+                pass  # dead session: its blocks are already gone
 
 
-# the process-wide service cache (the daemon role has one per process;
-# keys carry applicationId so session restarts can't collide)
-SERVICE_CACHE = QueryResultCache()
+# process-wide instances (keys carry applicationId, so session
+# restarts can't collide)
+SERVICE_CACHE = SnapshotCache()
+DERIVED = SnapshotCache(max_entries=DERIVED_MAX_ENTRIES, ttl_s=None)

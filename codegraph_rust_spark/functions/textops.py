@@ -10,9 +10,13 @@ snowball analyzer path is oracled by the in-repo Python oracle
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .common import t
+from .qcache import DERIVED
+
 
 def _TOKS():
     # lower → split single space → drop empties (== DuckDB
@@ -128,42 +132,18 @@ def bm25_topk(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) → (tf DataFrame, dl DataFrame, n_docs, avgdl).
-# The exhaustive oracle-slice family (bm25_topk + filtered + hybrid +
-# rerank) re-derived tf/doc_len from the raw text on EVERY call; the
-# inputs are a pure function of the immutable source table, so one
-# persisted materialization per session serves them all.  Keyed on
-# applicationId so a stopped/restarted session never sees stale RDD
-# handles.  (The engine path has its own on-disk index cache —
-# indexed.ensure_doc_index; this is its in-memory twin for the
-# oracle slice.)
-_BM25_INPUT_CACHE: dict = {}
-# max live-session sf_dir entries (insertion-ordered dict ⇒ oldest out)
-_BM25_CACHE_KEEP = 4
-
-
 def _bm25_inputs(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BM25_INPUT_CACHE.get(key)
-    if hit is None:
-        from pyspark import StorageLevel
+    """(tf DataFrame, dl DataFrame, n_docs, avgdl) for sf_dir.
 
-        # evict entries pinned to dead sessions (same policy as
-        # _GRAPH_CACHE / _MAX_KEY_CACHE) and RELEASE their executor
-        # storage; ALSO cap live-session growth — one session sweeping
-        # many sf_dirs (the pytest tmp-corpus pattern) would otherwise
-        # accumulate two persisted frames per dir for its lifetime
-        doomed = [k for k in _BM25_INPUT_CACHE if k[0] != key[0]]
-        same_app = [k for k in _BM25_INPUT_CACHE if k[0] == key[0]]
-        doomed += same_app[: max(0, len(same_app) + 1 - _BM25_CACHE_KEEP)]
-        for stale in doomed:
-            tf_old, dl_old, *_ = _BM25_INPUT_CACHE.pop(stale)
-            for df in (tf_old, dl_old):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # dead session: blocks are already gone
+    The exhaustive oracle-slice family (bm25_topk + filtered + hybrid +
+    rerank) would otherwise re-derive tf/doc_len from the raw text on
+    every call; the inputs are a pure function of ``documents``, so one
+    persisted materialization per session and snapshot of that file
+    serves them all (qcache.DERIVED; eviction unpersists both frames).
+    The engine path's twin is the on-disk ``indexed.ensure_doc_index``."""
+    from pyspark import StorageLevel
 
+    def compute():
         dl = _dl_df(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
         stats = dl.agg(
             F.count(F.lit(1)).alias("n_docs"), F.avg("doc_len").alias("avgdl")
@@ -174,9 +154,19 @@ def _bm25_inputs(spark: SparkSession, sf_dir: str):
             .agg(F.count(F.lit(1)).alias("tf"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        hit = (tf, dl, stats["n_docs"], stats["avgdl"] or 1.0)
-        _BM25_INPUT_CACHE[key] = hit
-    return hit
+        return tf, dl, stats["n_docs"], stats["avgdl"] or 1.0
+
+    def release(hit):
+        for df in hit[:2]:
+            df.unpersist()
+
+    return DERIVED.get_or_compute(
+        spark,
+        ("bm25_inputs", sf_dir),
+        [os.path.join(sf_dir, "documents.parquet")],
+        compute,
+        release,
+    )
 
 
 def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -59,6 +59,8 @@ in tests (FIXTURES.md §5 #5), for one-query and multi-query batches.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -418,21 +420,6 @@ class InvertedIndex:
     def topk(self, query: str, k: int = 10, mode: str = "taat") -> DataFrame:
         return self.topk_batch([(0, query)], k=k, mode=mode).drop("qid")
 
-    def snapshot_token(self) -> int:
-        """st_mtime_ns of the tokenized ledger's commit marker —
-        rewritten by every incremental swap (streaming/incremental.
-        _swap_ledger), so memoized query results can never outlive a
-        splice.  NANOSECOND resolution: float getmtime() could yield an
-        identical token for a splice landing within the same coarse
-        filesystem tick as the prior commit (advice r5)."""
-        import os
-
-        from ..plans.build import TOKENIZED
-
-        return os.stat(
-            os.path.join(self.cat.path(TOKENIZED), "_SUCCESS")
-        ).st_mtime_ns
-
     def topk_batch_cached(
         self,
         queries: list[tuple[int, str]],
@@ -445,21 +432,16 @@ class InvertedIndex:
         params) memoization, graph_tool_executor.rs:299-322).  The key
         carries the index snapshot token, so a repeat query within the
         TTL returns collected rows with zero Spark jobs while any
-        incremental splice transparently misses."""
+        incremental splice transparently misses: the snapshot token is
+        the tokenized ledger's ``_SUCCESS`` marker, rewritten by every
+        swap (streaming/incremental._swap_ledger)."""
         from ..functions.qcache import SERVICE_CACHE
+        from ..plans.build import TOKENIZED
 
-        key = (
-            "bm25_topk_batch",
-            self.spark.sparkContext.applicationId,
-            self.cat.root,
-            self.snapshot_token(),
-            tuple(queries),
-            k,
-            mode,
-            residues,
-        )
         return SERVICE_CACHE.get_or_compute(
-            key,
+            self.spark,
+            ("bm25_topk_batch", self.cat.root, tuple(queries), k, mode, residues),
+            [os.path.join(self.cat.path(TOKENIZED), "_SUCCESS")],
             lambda: self.topk_batch(queries, k=k, mode=mode, residues=residues).collect(),
         )
 

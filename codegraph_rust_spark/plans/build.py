@@ -228,6 +228,37 @@ def partition_input(pages: DataFrame, cfg: IndexConfig) -> DataFrame:
     return pages.repartition(cfg.input_partitions)
 
 
+def write_url_unique(
+    spark: SparkSession, cat: Catalog, name: str, cfg: IndexConfig, write
+) -> dict:
+    """Commit the tokenized ledger ``name`` through ``write(dedup)``
+    (returning its corpus scalars) with urls unique.
+
+    Duplicate urls collide on doc_id = xxhash64(url), so
+    distinct(doc_id) < n_docs exposes them; checking the ledger's one
+    int64 column replaces an eager url-probe scan of the raw corpus.
+    Only on a violation does ``write(True)`` rewrite from
+    url-deduplicated pages, and only then is the ledger re-checked: a
+    collision left after the rewrite is a true xxhash64 collision
+    between distinct urls, raised rather than committed."""
+    stats = write(False)
+    if (
+        cfg.doc_id_mode != "hash"
+        or not stats["n_docs"]
+        or cat.read(spark, name).select("doc_id").distinct().count()
+        == stats["n_docs"]
+    ):
+        return stats
+    stats = write(True)
+    dup = cat.read(spark, name).groupBy("doc_id").count().filter("count > 1").first()
+    if dup is not None:
+        raise ValueError(
+            f"distinct urls collide on doc_id {dup['doc_id']} (xxhash64) "
+            f"in ledger '{name}'"
+        )
+    return stats
+
+
 def build_index(
     spark: SparkSession,
     pages: DataFrame,
@@ -256,28 +287,21 @@ def build_index(
         # (n_docs/avgdl/fingerprint) ride the same pass as per-task
         # partials, costing zero extra jobs or scans
         t = time.time()
-        corpus_row = cat.write_arrow_direct(
-            tokenize_stage(pages, cfg, probe_dups=False),
+        corpus_row = write_url_unique(
+            spark,
+            cat,
             TOKENIZED,
-            ledger_stats=True,
-        )
-        # deferred url-uniqueness guard: duplicate urls collide on
-        # doc_id = xxhash64(url), so distinct(doc_id) < n_docs exposes
-        # them; checking the ledger's one int64 column replaces the
-        # old eager url-probe scan of the raw corpus (tokenize_stage),
-        # and the dedup+rewrite fallback only runs on violation
-        if (
-            cfg.doc_id_mode == "hash"
-            and corpus_row["n_docs"]
-            and cat.read(spark, TOKENIZED).select("doc_id").distinct().count()
-            != corpus_row["n_docs"]
-        ):
-            pages = pages.dropDuplicates(["url"])
-            corpus_row = cat.write_arrow_direct(
-                tokenize_stage(pages, cfg, probe_dups=False),
+            cfg,
+            lambda dedup: cat.write_arrow_direct(
+                tokenize_stage(
+                    pages.dropDuplicates(["url"]) if dedup else pages,
+                    cfg,
+                    probe_dups=False,
+                ),
                 TOKENIZED,
                 ledger_stats=True,
-            )
+            ),
+        )
         metrics["stages"][TOKENIZED] = {"wall_s": round(time.time() - t, 3)}
         write_corpus_row(cat, spark, corpus_row)
         done[CORPUS] = True

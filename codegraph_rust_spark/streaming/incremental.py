@@ -52,6 +52,7 @@ from ..plans.build import (
     read_docs,
     write_corpus_row,
     write_lineage,
+    write_url_unique,
 )
 from ..sources.catalog import Catalog
 
@@ -171,33 +172,27 @@ def incremental_update(
     old_tok = cat.read(spark, TOKENIZED)
     keep_tok = old_tok.join(changed_urls, "url", "left_anti")
     pages_re = pages_new.join(reindex_urls, "url", "left_semi")
-    new_tok = tokenize_stage(pages_re, cfg, probe_dups=False).select(
-        *old_tok.columns
-    )
     # worker-direct Arrow write (no JVM row transpose); the NEW
     # ledger's corpus scalars ride the write as per-task partials, so
-    # the post-splice corpus re-scan below is free
-    next_stats = cat.write_arrow_direct(
-        keep_tok.unionByName(new_tok), TOKENIZED + "_next", ledger_stats=True
+    # the post-splice corpus re-scan below is free.  Duplicate urls in
+    # the delta collide on doc_id — write_url_unique dedups on violation
+    next_stats = write_url_unique(
+        spark,
+        cat,
+        TOKENIZED + "_next",
+        cfg,
+        lambda dedup: cat.write_arrow_direct(
+            keep_tok.unionByName(
+                tokenize_stage(
+                    pages_re.dropDuplicates(["url"]) if dedup else pages_re,
+                    cfg,
+                    probe_dups=False,
+                ).select(*old_tok.columns)
+            ),
+            TOKENIZED + "_next",
+            ledger_stats=True,
+        ),
     )
-    # deferred url-uniqueness guard (see build_index): duplicate urls in
-    # the delta collide on doc_id — validate on the ledger's int64
-    # column, dedup + rewrite only on violation
-    if (
-        cfg.doc_id_mode == "hash"
-        and next_stats["n_docs"]
-        and cat.read(spark, TOKENIZED + "_next")
-        .select("doc_id")
-        .distinct()
-        .count()
-        != next_stats["n_docs"]
-    ):
-        new_tok = tokenize_stage(
-            pages_re.dropDuplicates(["url"]), cfg, probe_dups=False
-        ).select(*old_tok.columns)
-        next_stats = cat.write_arrow_direct(
-            keep_tok.unionByName(new_tok), TOKENIZED + "_next", ledger_stats=True
-        )
     next_tok = cat.read(spark, TOKENIZED + "_next")
 
     # --- dictionary delta merge (everything below reads the OLD ledger

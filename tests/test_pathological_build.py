@@ -97,3 +97,27 @@ def test_rank_identity_on_pathological_corpus(spark, patho_index):
             for (rank, doc_id, score), (w_doc, w_score) in zip(have, want):
                 assert doc_id == w_doc, (mode, qid, rank)
                 assert abs(score - w_score) < 1e-9, (mode, qid, rank)
+
+
+def test_url_guard_raises_on_doc_id_collision(spark, tmp_path):
+    """Two DISTINCT urls sharing one doc_id survive the url-dedup
+    rewrite — a true xxhash64 collision must raise, naming the doc_id,
+    instead of committing silently."""
+    from codegraph_rust_spark.plans.build import TOKENIZED, write_url_unique
+    from codegraph_rust_spark.sources.catalog import Catalog
+
+    cat = Catalog(str(tmp_path / "idx"))
+    ledger = spark.createDataFrame(
+        [(7, "https://p/a"), (7, "https://p/b")], "doc_id long, url string"
+    )
+    calls = []
+
+    def write(dedup):
+        calls.append(dedup)
+        df = ledger.dropDuplicates(["url"]) if dedup else ledger
+        df.write.mode("overwrite").parquet(cat.path(TOKENIZED))
+        return {"n_docs": df.count()}
+
+    with pytest.raises(ValueError, match="doc_id 7"):
+        write_url_unique(spark, cat, TOKENIZED, IndexConfig(), write)
+    assert calls == [False, True]  # the dedup rewrite ran, then re-checked
