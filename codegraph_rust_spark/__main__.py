@@ -69,7 +69,8 @@ def cmd_query(args) -> None:
     if args.urls:
         df = idx.with_urls(df)
     rows = [r.asDict() for r in df.collect()]
-    print(json.dumps({"wall_s": round(time.time() - t0, 3), "hits": rows}))
+    print(json.dumps({"wall_s": round(time.time() - t0, 3), "hits": rows,
+                      "profile": idx.last_profile}))
 
 
 # fallback schema when the drop dir is still empty at watcher start

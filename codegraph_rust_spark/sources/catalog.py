@@ -90,17 +90,55 @@ class Catalog:
         os.replace(tmp, p)
         shutil.rmtree(old, ignore_errors=True)
 
-    def read_local(self, name: str):
+    def read_local(
+        self,
+        name: str,
+        columns: list[str] | None = None,
+        where: dict | None = None,
+        partitions: tuple[str, list] | None = None,
+    ):
         """Read a committed catalog table into a DRIVER-LOCAL pyarrow
         Table — the reader twin of ``write_local`` for the same
-        control-plane tables.  ``spark.read.parquet(...).collect()``
+        control-plane tables, and the in-process reader of a query's
+        few matched posting rows.  ``spark.read.parquet(...).collect()``
         costs two Spark jobs (schema inference, then the collect);
         pyarrow reads a one-row table in milliseconds.  Files starting
         with ``_`` or ``.`` (commit marker, checksums, in-progress
-        parts) are not data, as for Spark's reader."""
+        parts) are not data, as for Spark's reader.
+
+        ``columns`` projects; ``where`` maps a column to the values it
+        may hold (one IN filter each, pushed into the scan, so row
+        groups whose statistics exclude them are skipped).
+        ``partitions = (col, values)`` reads only the ``col=value``
+        partition directories (a missing one holds no rows) and lists
+        nothing else; the partition column itself is not returned.
+        When those directories hold no data file the result is an
+        empty table of null-typed ``columns``."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        return pq.read_table(self.path(name), ignore_prefixes=["_", "."])
+        src, partitioning = self.path(name), "hive"
+        if partitions is not None:
+            col, values = partitions
+            src, partitioning = [], None
+            for v in sorted(set(values)):
+                d = os.path.join(self.path(name), f"{col}={v}")
+                if os.path.isdir(d):
+                    src += [
+                        os.path.join(d, f) for f in sorted(os.listdir(d))
+                        if not f.startswith(("_", "."))
+                    ]
+            if not src:
+                return pa.table({c: pa.nulls(0) for c in columns or []})
+        flt = None
+        for c, values in (where or {}).items():
+            e = pc.field(c).isin(list(values))
+            flt = e if flt is None else flt & e
+        return pq.read_table(
+            src, columns=columns, filters=flt, partitioning=partitioning,
+            ignore_prefixes=["_", "."],
+        )
 
     def write_arrow_direct(
         self,

@@ -133,8 +133,9 @@ def test_hnsw_layered_hops_are_broadcast_lookups(spark):
         _assert_hops_broadcast(spark, "layered", n_queries)
 
 
-def test_one_query_maxscore_is_two_spark_jobs(spark, tiny_index):
-    """A one-query MaxScore search routes term → qid with a literal
+def test_one_query_maxscore_is_two_spark_jobs(spark, tiny_index, monkeypatch):
+    """On the Spark path (forced: byte cap 0), a one-query MaxScore
+    search routes term → qid with a literal
     CASE in the scan projection and ranks with a global sort + limit:
     no parallelized query-terms frame (``Scan ExistingRDD``), no
     broadcast of it, and at most two Spark jobs when collected (the
@@ -142,8 +143,10 @@ def test_one_query_maxscore_is_two_spark_jobs(spark, tiny_index):
     three-query batch still ranks with a window partitioned by qid."""
     import re
 
+    from codegraph_rust_spark.operators import topk
     from codegraph_rust_spark.operators.topk import InvertedIndex
 
+    monkeypatch.setattr(topk, "LOCAL_MAX_BYTES", 0)
     idx = InvertedIndex(spark, tiny_index["dir"], tiny_index["cfg"])
     one = idx.topk_batch([(0, "running searches")], k=10, mode="maxscore")
     p = _plan(one)
@@ -164,6 +167,35 @@ def test_one_query_maxscore_is_two_spark_jobs(spark, tiny_index):
     )
     assert re.search(r"Window \[row_number\(\) windowspecdefinition\(qid#",
                      _plan(three))
+
+
+def test_small_query_runs_no_spark_job(spark, tiny_index):
+    """Opening an index makes no JVM call, and a query whose matched
+    postings fit under the byte cap — one-query and three-query
+    batches in both modes, and a query with no term in the index — is
+    answered in-process: collecting it runs no Spark job."""
+    from codegraph_rust_spark.operators.topk import InvertedIndex
+
+    idx = InvertedIndex(spark, tiny_index["dir"], tiny_index["cfg"])
+    assert "_post_df" not in vars(idx)
+    sc = spark.sparkContext
+    batches = (
+        [(0, "running searches")],
+        [(0, "running searches"), (1, "index merge"), (2, "search")],
+        [(0, "zzz-never-a-term")],
+    )
+    for i, queries in enumerate(batches):
+        for mode in ("taat", "maxscore"):
+            group = f"small-query-jobs-{i}-{mode}"
+            sc.setJobGroup(group, group)
+            try:
+                rows = idx.topk_batch(queries, k=10, mode=mode).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert idx.last_profile["path"] == "local"
+            assert bool(rows) == (i < 2)
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], (i, mode)
+    assert "_post_df" not in vars(idx)
 
 
 def test_nsw_lsh_graph_build_has_no_quadratic_join(spark):
