@@ -30,7 +30,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import IndexConfig
 from ..textkit.extract import extract_batch
@@ -187,86 +189,81 @@ def tokenize_stage(
     )
 
     def run(batches):
-        # token_id_counts fuses tokenize→stem→hash→count behind a
-        # worker-local raw-token→id memo (Zipf: the hot vocabulary is
-        # tiny); xxh64_str is bit-identical to Spark's xxhash64 (pinned
-        # by test), so ids assigned here == ids the query path derives.
-        #
-        # mapInArrow, not mapInPandas: the host probe shows the Python
-        # kernel itself scales ~0.94 over 4→16 workers while the old
-        # stage measured 0.70 — the non-scaling residue was the
-        # pandas↔Arrow conversions (object columns holding per-doc
-        # numpy arrays serialize element-at-a-time).  Here the three
-        # key columns pass through ZERO-COPY from the input batch and
-        # the two nested columns are built directly as Arrow
-        # ListArrays over one concatenated buffer each.
-        import pyarrow as pa
-
         for rb in batches:
-            cols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-            if use_html:
-                texts = extract_batch(cols[src_col].to_pylist())
-            else:
-                texts = cols[src_col].to_pylist()
-            n_rows = len(texts)
-            doc_lens = np.empty(n_rows, dtype=np.int64)
-            # accumulate offsets in int64: Arrow list<> carries int32
-            # offsets, so >2^31 flat values per batch would silently
-            # wrap — impossible at the default 10k-records Arrow batch
-            # size, but guarded loudly below rather than corrupting
-            offsets = np.empty(n_rows + 1, dtype=np.int64)
-            offsets[0] = 0
-            id_chunks: list[np.ndarray] = []
-            tf_chunks: list[np.ndarray] = []
-            for i, text in enumerate(texts):
-                cnt, ntoks = (
-                    token_id_counts(text, xxh64_str, analyzer)
-                    if text
-                    else ({}, 0)
-                )
-                doc_lens[i] = ntoks
-                m = len(cnt)
-                offsets[i + 1] = offsets[i] + m
-                if m:
-                    id_chunks.append(
-                        np.fromiter(cnt.keys(), dtype=np.int64, count=m)
-                    )
-                    tf_chunks.append(
-                        np.fromiter(cnt.values(), dtype=np.int32, count=m)
-                    )
-            flat_ids = (
-                np.concatenate(id_chunks) if id_chunks
-                else np.empty(0, dtype=np.int64)
-            )
-            flat_tfs = (
-                np.concatenate(tf_chunks) if tf_chunks
-                else np.empty(0, dtype=np.int32)
-            )
-            if offsets[n_rows] >= 2**31:
-                raise ValueError(
-                    f"tokenize batch has {offsets[n_rows]} flat terms — "
-                    "exceeds Arrow int32 list offsets; lower "
-                    "spark.sql.execution.arrow.maxRecordsPerBatch"
-                )
-            off_arr = pa.array(offsets, type=pa.int32())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    cols["doc_id"],
-                    cols["url"],
-                    cols["content_hash"],
-                    pa.array(doc_lens, type=pa.int64()),
-                    pa.ListArray.from_arrays(
-                        off_arr, pa.array(flat_ids, type=pa.int64())
-                    ),
-                    pa.ListArray.from_arrays(
-                        off_arr, pa.array(flat_tfs, type=pa.int32())
-                    ),
-                ],
-                names=["doc_id", "url", "content_hash", "doc_len",
-                       "term_ids", "tfs"],
-            )
+            yield tokenize_batch(rb, src_col, analyzer)
 
     return inp.mapInArrow(run, schema=TOKENIZED_SCHEMA)
+
+
+def tokenize_batch(rb, src_col: str, analyzer: str):
+    """The tokenize kernel: one Arrow batch of (doc_id, url,
+    content_hash, <src_col>) → the same rows in TOKENIZED_SCHEMA, the
+    source column replaced by doc_len and the parallel (term_ids, tfs)
+    lists.  ``tokenize_stage`` runs it per batch on the workers; an
+    in-process index update runs it on the driver.
+
+    token_id_counts fuses tokenize→stem→hash→count behind a
+    worker-local raw-token→id memo (Zipf: the hot vocabulary is
+    tiny); xxh64_str is bit-identical to Spark's xxhash64 (pinned by
+    test), so ids assigned here == ids the query path derives.
+
+    Arrow in and out, not pandas: the host probe shows the Python
+    kernel itself scales ~0.94 over 4→16 workers while the old
+    mapInPandas stage measured 0.70 — the non-scaling residue was the
+    pandas↔Arrow conversions (object columns holding per-doc numpy
+    arrays serialize element-at-a-time).  Here the three key columns
+    pass through ZERO-COPY from the input batch and the two nested
+    columns are built directly as Arrow ListArrays over one
+    concatenated buffer each."""
+    cols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
+    if src_col == "html":
+        texts = extract_batch(cols[src_col].to_pylist())
+    else:
+        texts = cols[src_col].to_pylist()
+    n_rows = len(texts)
+    doc_lens = np.empty(n_rows, dtype=np.int64)
+    # accumulate offsets in int64: Arrow list<> carries int32 offsets,
+    # so >2^31 flat values per batch would silently wrap — impossible
+    # at the default 10k-records Arrow batch size, but guarded loudly
+    # below rather than corrupting
+    offsets = np.empty(n_rows + 1, dtype=np.int64)
+    offsets[0] = 0
+    id_chunks: list[np.ndarray] = []
+    tf_chunks: list[np.ndarray] = []
+    for i, text in enumerate(texts):
+        cnt, ntoks = (
+            token_id_counts(text, xxh64_str, analyzer) if text else ({}, 0)
+        )
+        doc_lens[i] = ntoks
+        m = len(cnt)
+        offsets[i + 1] = offsets[i] + m
+        if m:
+            id_chunks.append(np.fromiter(cnt.keys(), dtype=np.int64, count=m))
+            tf_chunks.append(np.fromiter(cnt.values(), dtype=np.int32, count=m))
+    flat_ids = (
+        np.concatenate(id_chunks) if id_chunks else np.empty(0, dtype=np.int64)
+    )
+    flat_tfs = (
+        np.concatenate(tf_chunks) if tf_chunks else np.empty(0, dtype=np.int32)
+    )
+    if offsets[n_rows] >= 2**31:
+        raise ValueError(
+            f"tokenize batch has {offsets[n_rows]} flat terms — "
+            "exceeds Arrow int32 list offsets; lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch"
+        )
+    off_arr = pa.array(offsets, type=pa.int32())
+    return pa.RecordBatch.from_arrays(
+        [
+            cols["doc_id"],
+            cols["url"],
+            cols["content_hash"],
+            pa.array(doc_lens, type=pa.int64()),
+            pa.ListArray.from_arrays(off_arr, pa.array(flat_ids, type=pa.int64())),
+            pa.ListArray.from_arrays(off_arr, pa.array(flat_tfs, type=pa.int32())),
+        ],
+        names=["doc_id", "url", "content_hash", "doc_len", "term_ids", "tfs"],
+    )
 
 
 def explode_tf(tokenized: DataFrame) -> DataFrame:
@@ -493,6 +490,18 @@ def encode_partials(
     return cols.mapInArrow(run, schema=PARTIALS_SCHEMA)
 
 
+def _binary_flat(arr):
+    """(uint8 values, int64 offsets) of an Arrow Binary column —
+    zero-copy views over the Arrow buffers."""
+    if len(arr) == 0:
+        return np.zeros(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
+    bufs = arr.buffers()
+    offs = np.frombuffer(bufs[1], dtype=np.int32)[
+        arr.offset : arr.offset + len(arr) + 1
+    ].astype(np.int64)
+    return np.frombuffer(bufs[2], dtype=np.uint8), offs
+
+
 def _encode_final_chunk(rid, term_of_rid, salt_of_rid, doc_ids, tfs, dls,
                         block, out):
     """Slice one run-id-sorted chunk into runs and emit one FINAL
@@ -580,16 +589,6 @@ def merge_partials(
 
     import os as _os
     _debug = _os.environ.get("CGRS_DEBUG_TIMING") == "1"
-
-    def _binary_flat(arr):
-        """(uint8 values, int64 offsets) of an Arrow Binary column —
-        zero-copy views over the Arrow buffers."""
-        bufs = arr.buffers()
-        offs = np.frombuffer(bufs[1], dtype=np.int32)[
-            arr.offset : arr.offset + len(arr) + 1
-        ].astype(np.int64)
-        data = np.frombuffer(bufs[2], dtype=np.uint8)
-        return data, offs
 
     def run(batches):
         import sys as _sys
@@ -706,6 +705,130 @@ def _n_salts_py(df: int, cfg: IndexConfig) -> int:
     return cfg.max_salts
 
 
+def _block_starts(run_offs: np.ndarray, block: int) -> np.ndarray:
+    """Start offsets of every codec block of the concatenated runs
+    ``[run_offs[r], run_offs[r+1])`` — where the doc-id delta chains
+    restart (``_encode_final_chunk``)."""
+    lens = np.diff(run_offs)
+    nblocks = (lens + block - 1) // block
+    boffs = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(nblocks, out=boffs[1:])
+    block_run = np.repeat(np.arange(len(lens)), nblocks)
+    within = (np.arange(int(boffs[-1])) - boffs[block_run]) * block
+    return run_offs[:-1][block_run] + within
+
+
+def merge_delta(old, removed, added, cfg: IndexConfig):
+    """The delta-merge kernel: fold a doc-granular delta into encoded
+    posting rows, vectorized over every affected term at once.
+
+    ``old`` holds the POSTINGS_SCHEMA rows of some whole term buckets
+    (an Arrow table); ``removed = (term_id, doc_id)`` arrays are the
+    postings of the removed documents, ``added = (term_id, doc_id, tf,
+    doc_len)`` those of the (re-)added ones, both restricted to the
+    same buckets.  Rows of terms outside the delta pass through with
+    their payloads untouched.  Rows of delta terms are
+
+    1. decoded all at once (``decode_runs_flat`` over the Arrow binary
+       buffers);
+    2. delta-decoded with the chain restarting at every block start;
+    3. stripped of every posting of a removed doc (a removed doc only
+       occurs in its own terms, so one doc-id set serves them all);
+    4. joined by the added postings;
+    5. re-salted under each term's NEW df (``_n_salts_py``: crossing a
+       salt threshold re-shards the term);
+    6. lexsorted by (term, salt, doc) and re-encoded by one
+       ``_encode_final_chunk`` call — the bulk build's encoder, so the
+       rows equal a from-scratch rebuild's.
+
+    A term left with no posting vanishes; a term new to the corpus is
+    encoded from the delta alone.  Returns POSTINGS_TABLE_SCHEMA rows
+    sorted by (tbucket, term_id, salt).  Both update paths run it: the
+    Spark plan once per task (``delta_merge_postings``), an in-process
+    update once on the driver (streaming/incremental.py)."""
+    schema = to_arrow_schema(POSTINGS_SCHEMA)
+    old = old.select(POSTINGS_SCHEMA.names).cast(schema).combine_chunks()
+    rm_t, rm_d = (np.asarray(x, dtype=np.int64) for x in removed)
+    ad_t, ad_d, ad_tf, ad_dl = (np.asarray(x, dtype=np.int64) for x in added)
+    block = cfg.block_size
+
+    affected = np.isin(
+        old.column("term_id").to_numpy(), np.concatenate([rm_t, ad_t])
+    )
+    keep = old.filter(pa.array(~affected))
+    aff = old.filter(pa.array(affected))
+
+    # 1-2. decode every affected row in one pass per payload stream
+    def decode(col, itemsize):
+        return decode_runs_flat(
+            *_binary_flat(aff.column(col).combine_chunks()), itemsize
+        )
+
+    gaps, run_offs = decode("doc_payload", 8)
+    docs = delta_decode_runs(gaps, _block_starts(run_offs, block))
+    tfs, dls = decode("tf_payload", 4)[0], decode("dl_payload", 4)[0]
+    terms = np.repeat(
+        aff.column("term_id").to_numpy().astype(np.int64), np.diff(run_offs)
+    )
+
+    # 3-4. drop the removed docs' postings, append the added ones
+    live = ~np.isin(docs, rm_d)
+    t = np.concatenate([terms[live], ad_t])
+    d = np.concatenate([docs[live], ad_d])
+    tf = np.concatenate([tfs[live].astype(np.int64), ad_tf])
+    dl = np.concatenate([dls[live].astype(np.int64), ad_dl])
+
+    # 5. re-salt under the new df (tail terms: one shard)
+    uterm, inv, df = np.unique(t, return_inverse=True, return_counts=True)
+    ns = np.ones(len(uterm), dtype=np.int64)
+    head = np.flatnonzero(df > cfg.salt_df_threshold)
+    ns[head] = [_n_salts_py(int(x), cfg) for x in df[head]]
+    salt = np.mod(d, ns[inv])
+
+    # 6. one sort, one encode
+    order = np.lexsort((d, salt, t))
+    t, salt, d, tf, dl = t[order], salt[order], d[order], tf[order], dl[order]
+    rid = np.zeros(len(t), dtype=np.int64)
+    rid[1:] = (t[1:] != t[:-1]) | (salt[1:] != salt[:-1])
+    np.cumsum(rid, out=rid)
+    first = np.flatnonzero(np.r_[True, rid[1:] != rid[:-1]]) if len(rid) else rid
+    enc: list = []
+    _encode_final_chunk(rid, t[first], salt[first], d, tf, dl, block, enc)
+
+    cols = list(zip(*enc)) or [[]] * 10
+    run_t = np.asarray(cols[0], dtype=np.int64)
+    new_df = df[np.searchsorted(uterm, run_t)]
+    merged = pa.table(
+        [pa.array(cols[0], pa.int64()), pa.array(cols[1], pa.int32()),
+         pa.array(new_df, pa.int64()), *(
+             pa.array(c, schema.field(i).type) for i, c in enumerate(cols[2:], 3)
+         )],
+        schema=schema,
+    )
+    out = pa.concat_tables([keep, merged])
+    tb = cfg.term_buckets
+    out = out.append_column(
+        "tbucket",
+        pa.array(np.mod(out.column("term_id").to_numpy(), tb).astype(np.int32)),
+    )
+    return out.sort_by(
+        [("tbucket", "ascending"), ("term_id", "ascending"), ("salt", "ascending")]
+    ).cast(to_arrow_schema(POSTINGS_TABLE_SCHEMA))
+
+
+# the Spark update plan's kernel input: posting rows of the touched
+# buckets plus the delta's postings as extra rows (n and the payloads
+# null; tf null marks a removed posting)
+_MERGE_IN_SCHEMA = T.StructType(
+    [
+        *POSTINGS_TABLE_SCHEMA.fields,
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("tf", T.IntegerType()),
+        T.StructField("doc_len", T.LongType()),
+    ]
+)
+
+
 def delta_merge_postings(
     old_post: DataFrame,
     removed_tf: DataFrame,
@@ -713,243 +836,72 @@ def delta_merge_postings(
     cfg: IndexConfig,
     touched: list[int],
 ) -> DataFrame:
-    """O(delta)-shaped incremental postings maintenance: merge a
-    doc-granular delta INTO the already-encoded posting rows instead of
-    re-running the whole SPIMI pipeline over the corpus ledger.
+    """O(delta)-shaped incremental postings maintenance on Spark:
+    merge a doc-granular delta INTO the already-encoded posting rows of
+    the touched buckets instead of re-running the whole SPIMI pipeline
+    over the corpus ledger.  The unit of work is the TERM, not the
+    bucket: posting rows of terms outside the delta pass through with
+    their payloads untouched, delta terms are decoded, merged,
+    re-salted and re-encoded (``merge_delta``).
 
-    The previous incremental path re-encoded every touched bucket from
-    scratch (explode + sort + shuffle + merge over ALL docs whose terms
-    hash into a touched bucket — at web dials where a 1% delta's
-    vocabulary covers every bucket, that degenerates into a full
-    postings rebuild).  Here the unit of work is the TERM, not the
-    bucket:
+    Plan: the touched buckets' posting rows and the delta's posting
+    rows (``removed_tf`` / ``added_tf``: explode_tf-shaped
+    (doc_id, doc_len, term_id, tf) rows of the removed / added
+    documents) are unioned into one frame, hash-partitioned by
+    tbucket, and each task runs ``merge_delta`` over its whole
+    buckets.  Every bucket lives in one task and the kernel returns it
+    sorted, so each bucket is written as one sorted file with tight
+    term_id row-group stats.  Cost: one pruned scan of the touched
+    ``tbucket=`` directories, one exchange of those rows plus the
+    delta, and numpy decode/encode proportional to the AFFECTED lists'
+    length — never a corpus-sized shuffle.
 
-    * posting rows of terms absent from the delta PASS THROUGH with
-      their encoded payloads untouched (no decode, no re-encode — the
-      Zipf tail, which is most of the vocabulary, costs one columnar
-      copy);
-    * rows of delta terms are decoded, the removed doc_ids dropped, the
-      added (doc, tf, dl) entries appended, the term RE-SALTED under
-      its new df (crossing a salt threshold re-shards correctly), and
-      re-encoded through the same ``_encode_final_chunk`` as the bulk
-      build — so payload bytes equal a from-scratch rebuild's exactly
-      (gated by test_incremental_equals_scratch's payload xor-hash);
-    * terms new to the corpus (no old row) are encoded from the delta
-      alone.
-
-    Cost: one pruned scan of the touched ``tbucket=`` directories plus
-    numpy decode/encode proportional to the AFFECTED lists' length —
-    never a corpus-sized shuffle.  The per-term delta arrays are
-    broadcast (O(delta) bytes); at deltas too large to broadcast the
-    bulk build is the right tool anyway (documented dial).
-
-    ``removed_tf`` / ``added_tf`` carry (doc_id, doc_len, term_id, tf)
-    rows for the removed / added documents (explode_tf shape).
-    Returns rows in POSTINGS_SCHEMA + tbucket for the touched buckets
+    Returns rows in POSTINGS_TABLE_SCHEMA for the touched buckets
     only."""
     spark = old_post.sparkSession
-    block = cfg.block_size
-    tb = cfg.term_buckets
+    touched = [int(b) for b in touched]
+    bucket = F.pmod(F.col("term_id"), F.lit(cfg.term_buckets)).cast("int")
 
-    rm_g = removed_tf.groupBy("term_id").agg(
-        F.collect_list("doc_id").alias("rm_docs"),
-        F.count(F.lit(1)).alias("rm_df"),
-    )
-    ad_g = added_tf.groupBy("term_id").agg(
-        F.collect_list(F.struct("doc_id", "tf", "doc_len")).alias("ad"),
-        F.count(F.lit(1)).alias("ad_df"),
-    )
-    # materialize once: the delta arrays are referenced by BOTH legs
-    # below (broadcast join + new-term anti-join), and their lineage
-    # re-runs ledger semi-joins + explodes per reference otherwise.
-    # O(delta) rows — tiny by definition of an incremental update.
-    delta = rm_g.join(ad_g, "term_id", "full_outer").localCheckpoint(eager=False)
+    def shape(df):
+        return df.select(
+            *(
+                F.col(f.name) if f.name in df.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in _MERGE_IN_SCHEMA.fields
+            )
+        )
 
-    old_cols = [*POSTINGS_SCHEMA.names, "tbucket"]
-    leg1 = old_post.filter(
-        F.col("tbucket").isin([int(b) for b in touched])
-    ).select(*old_cols).join(F.broadcast(delta), "term_id", "left")
-    # brand-new terms: no old posting row anywhere — their bucket is
-    # touched by construction, so the anti-join side is bucket-sized
-    new_terms = delta.join(
-        old_post.filter(F.col("tbucket").isin([int(b) for b in touched]))
-        .select("term_id").distinct(),
-        "term_id",
-        "left_anti",
+    merged_in = shape(old_post.filter(F.col("tbucket").isin(touched))).unionByName(
+        shape(removed_tf.select("term_id", "doc_id").withColumn("tbucket", bucket))
+    ).unionByName(
+        shape(added_tf.withColumn("tbucket", bucket))
     )
-    leg2 = new_terms.select(
-        "term_id",
-        F.lit(None).cast(T.IntegerType()).alias("salt"),
-        F.lit(None).cast(T.LongType()).alias("df"),
-        F.lit(None).cast(T.IntegerType()).alias("n"),
-        F.lit(None).cast(T.BinaryType()).alias("doc_payload"),
-        F.lit(None).cast(T.BinaryType()).alias("tf_payload"),
-        F.lit(None).cast(T.BinaryType()).alias("dl_payload"),
-        F.lit(None).cast(T.LongType()).alias("n_bytes"),
-        F.lit(None).cast(T.ArrayType(T.LongType())).alias("block_last_doc"),
-        F.lit(None).cast(T.ArrayType(T.IntegerType())).alias("block_tf"),
-        F.lit(None).cast(T.ArrayType(T.IntegerType())).alias("block_dl"),
-        F.pmod(F.col("term_id"), F.lit(tb)).cast("int").alias("tbucket"),
-        "rm_docs",
-        "rm_df",
-        "ad",
-        "ad_df",
-    )
-    merged_in = leg1.select(*leg2.columns).unionByName(leg2)
     n_part = max(1, min(len(touched), int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )))
-    merged_in = merged_in.repartition(n_part, "tbucket")
-
-    out_schema = POSTINGS_TABLE_SCHEMA
-    thr, max_salts = cfg.salt_df_threshold, cfg.max_salts
+    names = POSTINGS_SCHEMA.names
 
     def run(batches):
-        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        a_schema = to_arrow_schema(out_schema)
-        tabs = [pa.Table.from_batches([rb]) for rb in batches if rb.num_rows]
-        if not tabs:
+        rbs = [rb for rb in batches if rb.num_rows]
+        if not rbs:
             return
-        tab = pa.concat_tables(tabs)
-        rm_valid = ~np.asarray(tab.column("rm_df").is_null())
-        ad_valid = ~np.asarray(tab.column("ad_df").is_null())
-        affected = rm_valid | ad_valid
-
-        # 1. pass-through: rows of terms outside the delta keep their
-        #    encoded payloads bit-for-bit (columnar copy only)
-        keep = tab.filter(pa.array(~affected)).select(
-            [*POSTINGS_SCHEMA.names, "tbucket"]
+        tab = pa.Table.from_batches(rbs)
+        is_old = tab.column("n").is_valid()
+        delta = tab.filter(pc.invert(is_old))
+        is_add = delta.column("tf").is_valid()
+        rm, ad = delta.filter(pc.invert(is_add)), delta.filter(is_add)
+        out = merge_delta(
+            tab.filter(is_old).select(names),
+            [rm.column(c).to_numpy() for c in ("term_id", "doc_id")],
+            [ad.column(c).to_numpy() for c in ("term_id", "doc_id", "tf", "doc_len")],
+            cfg,
         )
-        for rb in keep.cast(a_schema).to_batches(65536):
-            yield rb
+        yield from out.to_batches(65536)
 
-        if not affected.any():
-            return
-        aff = tab.filter(pa.array(affected))
-        term = np.asarray(aff.column("term_id"), dtype=np.int64)
-        has_old = ~np.asarray(aff.column("n").is_null())
-        docp = aff.column("doc_payload").to_pylist()
-        tfp = aff.column("tf_payload").to_pylist()
-        dlp = aff.column("dl_payload").to_pylist()
-        rm_l = aff.column("rm_docs").to_pylist()
-        ad_l = aff.column("ad").to_pylist()
-
-        from .codec import decode_u32, decode_u64, delta_decode_blocked
-
-        order = np.argsort(term, kind="stable")
-        t_sorted = term[order]
-        bounds = np.nonzero(
-            np.concatenate([[True], t_sorted[1:] != t_sorted[:-1]])
-        )[0]
-        bounds = np.append(bounds, len(t_sorted))
-
-        out_t: list = []
-        out_s: list = []
-        out_d: list = []
-        out_tf: list = []
-        out_dl: list = []
-        df_of_term: list = []
-        for gi in range(len(bounds) - 1):
-            rows = order[bounds[gi] : bounds[gi + 1]]
-            t_id = int(term[rows[0]])
-            docs_parts, tf_parts, dl_parts = [], [], []
-            rm_docs = None
-            ad_rows = None
-            for r in rows:
-                r = int(r)
-                if has_old[r]:
-                    docs_parts.append(
-                        delta_decode_blocked(decode_u64(bytes(docp[r])), block)
-                    )
-                    tf_parts.append(decode_u32(bytes(tfp[r])).astype(np.int64))
-                    dl_parts.append(decode_u32(bytes(dlp[r])).astype(np.int64))
-                if rm_docs is None and rm_l[r] is not None:
-                    rm_docs = np.asarray(rm_l[r], dtype=np.int64)
-                if ad_rows is None and ad_l[r] is not None:
-                    ad_rows = ad_l[r]
-            if docs_parts:
-                docs = np.concatenate(docs_parts)
-                tfs = np.concatenate(tf_parts)
-                dls = np.concatenate(dl_parts)
-            else:
-                docs = np.empty(0, dtype=np.int64)
-                tfs = np.empty(0, dtype=np.int64)
-                dls = np.empty(0, dtype=np.int64)
-            if rm_docs is not None and len(docs):
-                keep_m = ~np.isin(docs, rm_docs)
-                docs, tfs, dls = docs[keep_m], tfs[keep_m], dls[keep_m]
-            if ad_rows:
-                docs = np.concatenate(
-                    [docs, np.array([a["doc_id"] for a in ad_rows], np.int64)]
-                )
-                tfs = np.concatenate(
-                    [tfs, np.array([a["tf"] for a in ad_rows], np.int64)]
-                )
-                dls = np.concatenate(
-                    [dls, np.array([a["doc_len"] for a in ad_rows], np.int64)]
-                )
-            df_new = len(docs)
-            if df_new == 0:
-                continue  # term vanished from the corpus
-            ns = _n_salts_py(df_new, cfg)
-            salt = np.mod(docs, ns)
-            o2 = np.lexsort((docs, salt))
-            out_t.append(np.full(df_new, t_id, dtype=np.int64))
-            out_s.append(salt[o2])
-            out_d.append(docs[o2])
-            out_tf.append(tfs[o2])
-            out_dl.append(dls[o2])
-            df_of_term.append((t_id, df_new))
-
-        if not out_t:
-            return
-        t_all = np.concatenate(out_t)
-        s_all = np.concatenate(out_s)
-        d_all = np.concatenate(out_d)
-        tf_all = np.concatenate(out_tf)
-        dl_all = np.concatenate(out_dl)
-        # dense run ids over the already-(term, salt)-sorted stream
-        change = np.zeros(len(t_all), dtype=np.int64)
-        change[1:] = (t_all[1:] != t_all[:-1]) | (s_all[1:] != s_all[:-1])
-        np.cumsum(change, out=change)
-        starts = np.nonzero(
-            np.concatenate([[True], change[1:] != change[:-1]])
-        )[0]
-        term_of_rid = t_all[starts]
-        salt_of_rid = s_all[starts]
-        enc: list = []
-        _encode_final_chunk(
-            change, term_of_rid, salt_of_rid, d_all, tf_all, dl_all, block, enc
-        )
-        df_map = dict(df_of_term)
-        rows_out = [
-            (
-                r[0],            # term_id
-                r[1],            # salt
-                df_map[r[0]],    # df (new)
-                r[2],            # n
-                r[3], r[4], r[5],  # payloads
-                r[6],            # n_bytes
-                r[7], r[8], r[9],  # block metadata
-                int(r[0]) % tb,  # tbucket
-            )
-            for r in enc
-        ]
-        for s0 in range(0, len(rows_out), 65536):
-            cz = list(zip(*rows_out[s0 : s0 + 65536]))
-            yield pa.record_batch(
-                [pa.array(c, a_schema.field(i).type) for i, c in enumerate(cz)],
-                schema=a_schema,
-            )
-
-    out = merged_in.mapInArrow(run, schema=out_schema)
-    # cluster + sort exactly like the bulk build's tail so each bucket
-    # writes as one sorted file with tight term_id row-group stats
-    return out.repartition(n_part, "tbucket").sortWithinPartitions(
-        "tbucket", "term_id"
+    return merged_in.repartition(n_part, "tbucket").mapInArrow(
+        run, schema=POSTINGS_TABLE_SCHEMA
     )
 
 

@@ -613,7 +613,7 @@ class InvertedIndex:
         TTL returns collected rows with zero Spark jobs while any
         incremental splice transparently misses: the snapshot token is
         the tokenized ledger's ``_SUCCESS`` marker, rewritten by every
-        swap (streaming/incremental._swap_ledger)."""
+        swap (streaming/incremental._swap_table)."""
         from ..functions.qcache import SERVICE_CACHE
         from ..plans.build import TOKENIZED
 

@@ -77,24 +77,42 @@ def write_lineage(cat: Catalog, spark: SparkSession, fingerprint: int) -> int:
         )
         .collect()
     )
+    return _write_manifest(cat, [tuple(r) for r in buckets], fingerprint)
+
+
+def write_lineage_local(cat: Catalog, fingerprint: int) -> int:
+    """``write_lineage`` computed on the driver: the per-bucket
+    aggregates come from pyarrow over the postings table's two int
+    columns (``n``, ``n_bytes``), with no Spark job — the lineage step
+    of an index update's commit (streaming/incremental.py)."""
+    post = cat.read_local(POSTINGS, columns=["tbucket", "n", "n_bytes"])
+    agg = post.group_by("tbucket").aggregate(
+        [("n", "count"), ("n", "sum"), ("n_bytes", "sum")]
+    ).to_pydict()
+    return _write_manifest(
+        cat,
+        sorted(zip(agg["tbucket"], agg["n_count"], agg["n_sum"], agg["n_bytes_sum"])),
+        fingerprint,
+    )
+
+
+def _write_manifest(cat: Catalog, buckets: list[tuple], fingerprint: int) -> int:
+    """Commit the manifest from (tbucket, rows, postings, bytes) rows;
+    returns the summed postings."""
     from datetime import datetime, timezone
 
     import pyarrow as pa
 
     now = datetime.now(timezone.utc).replace(tzinfo=None)
+    tbucket, rows, postings, nbytes = (list(c) for c in zip(*buckets)) if buckets \
+        else ([], [], [], [])
     cat.write_local(
         pa.table(
             {
-                "tbucket": pa.array(
-                    [r["tbucket"] for r in buckets], pa.int32()
-                ),
-                "rows": pa.array([int(r["rows"]) for r in buckets], pa.int64()),
-                "postings": pa.array(
-                    [int(r["postings"] or 0) for r in buckets], pa.int64()
-                ),
-                "bytes": pa.array(
-                    [int(r["bytes"] or 0) for r in buckets], pa.int64()
-                ),
+                "tbucket": pa.array(tbucket, pa.int32()),
+                "rows": pa.array([int(r) for r in rows], pa.int64()),
+                "postings": pa.array([int(p or 0) for p in postings], pa.int64()),
+                "bytes": pa.array([int(b or 0) for b in nbytes], pa.int64()),
                 "stage": pa.array([POSTINGS] * len(buckets), pa.string()),
                 "input_fingerprint": pa.array(
                     [int(fingerprint)] * len(buckets), pa.int64()
@@ -104,7 +122,7 @@ def write_lineage(cat: Catalog, spark: SparkSession, fingerprint: int) -> int:
         ),
         MANIFEST,
     )
-    return int(sum(r["postings"] or 0 for r in buckets))
+    return int(sum(int(p or 0) for p in postings))
 
 
 CORPUS_AGGS = lambda: [  # noqa: E731 — shared by observe and agg paths
@@ -299,7 +317,7 @@ def build_index(
                     probe_dups=False,
                 ),
                 TOKENIZED,
-                ledger_stats=True,
+                ledger_stats=cfg.doc_id_mode,
             ),
         )
         metrics["stages"][TOKENIZED] = {"wall_s": round(time.time() - t, 3)}

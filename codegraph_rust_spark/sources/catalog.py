@@ -25,7 +25,82 @@ from __future__ import annotations
 import os
 import shutil
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+
+
+def partition_runs(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, stops) of the runs of equal values in `vals` — the
+    pieces a partitioned write sends to one ``col=value`` file each
+    (upstream sorts by the partition column, so runs are long; an
+    arbitrary interleave still works, just in more pieces)."""
+    starts = np.concatenate([[0], np.flatnonzero(np.diff(vals)) + 1])
+    return starts, np.append(starts[1:], len(vals))
+
+
+def ledger_fingerprint(doc_id, url, hashed: bool) -> int:
+    """CORPUS_AGGS' ``bit_xor(xxhash64(url))`` over ledger rows.  When
+    `hashed` (doc_id_mode "hash") every doc_id IS xxhash64(url), so the
+    fingerprint is the XOR of the doc_id column — no per-url Python
+    hashing; otherwise each url is hashed with the Python twin of
+    Spark's xxhash64, whose value for NULL is 42 (the unmodified
+    seed)."""
+    if hashed:
+        ids = np.asarray(doc_id, dtype=np.int64)
+        return int(np.bitwise_xor.reduce(ids)) if len(ids) else 0
+    from ..operators.xxhash import xxh64_str
+
+    fp = 0
+    for u in url.to_pylist():
+        fp ^= xxh64_str(u) if u is not None else 42
+    return fp
+
+
+def write_parts(path, batches, pid: int, partition_col=None, ledger_stats=False):
+    """Write one task's Arrow batches as ``part-{pid}.parquet`` — under
+    ``partition_col=value`` subdirectories when partitioned, the
+    column itself dropped — each part written to a dot-prefixed
+    ``.inprogress`` name and renamed on close.  Returns the task's
+    (rows, summed doc_len, ledger fingerprint) partials; the last two
+    are 0 unless ``ledger_stats``.  Shared by ``write_arrow_direct``'s
+    tasks and ``write_arrow_local``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    writers: dict = {}  # partition value (or None) → (tmp, final, writer)
+
+    def get_writer(key, schema):
+        w = writers.get(key)
+        if w is None:
+            d = path if key is None else os.path.join(path, f"{partition_col}={key}")
+            os.makedirs(d, exist_ok=True)
+            tmp = os.path.join(d, f".part-{pid:05d}.parquet.inprogress")
+            final = os.path.join(d, f"part-{pid:05d}.parquet")
+            w = writers[key] = (tmp, final, pq.ParquetWriter(tmp, schema))
+        return w[2]
+
+    n = ntok = fp = 0
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        n += rb.num_rows
+        if ledger_stats:
+            ntok += int(pc.sum(rb.column("doc_len")).as_py() or 0)
+            fp ^= ledger_fingerprint(
+                rb.column("doc_id"), rb.column("url"), ledger_stats == "hash"
+            )
+        if partition_col is None:
+            get_writer(None, rb.schema).write_batch(rb)
+            continue
+        vals = rb.column(partition_col).to_numpy(zero_copy_only=False)
+        body = rb.drop_columns([partition_col])
+        starts, stops = partition_runs(vals)
+        for a, b in zip(starts.tolist(), stops.tolist()):
+            get_writer(int(vals[a]), body.schema).write_batch(body.slice(a, b - a))
+    for tmp, final, w in writers.values():
+        w.close()
+        os.replace(tmp, final)
+    return n, ntok, fp
 
 
 class Catalog:
@@ -144,7 +219,7 @@ class Catalog:
         self,
         df: DataFrame,
         name: str,
-        ledger_stats: bool = False,
+        ledger_stats: bool | str = False,
         partition_col: str | None = None,
     ) -> dict:
         """Worker-direct parquet write: every task streams its Arrow
@@ -165,14 +240,13 @@ class Catalog:
         other master raises ``RuntimeError`` before anything is
         written.
 
-        With ``ledger_stats=True`` the corpus scalars
+        With ``ledger_stats`` set the corpus scalars
         (n_docs/avgdl/n_tokens/input_fingerprint — CORPUS_AGGS
-        semantics, xxh64_str == Spark xxhash64 pinned by test) ride the
-        write as per-task partials folded on the driver, so no
-        separate corpus scan is needed.  Returned dict always carries
-        ``n_docs``."""
-        import pyarrow.parquet as pq
-        from pyspark.sql import functions as F  # noqa: F401 (API parity)
+        semantics) ride the write as per-task partials folded on the
+        driver, so no separate corpus scan is needed: ``"hash"`` (the
+        ledger's doc_id_mode) says doc_id already is xxhash64(url),
+        ``True`` or ``"provided"`` hash every url (``ledger_fingerprint``).
+        Returned dict always carries ``n_docs``."""
         from pyspark.sql.pandas.types import to_arrow_schema
 
         master = df.sparkSession.sparkContext.master
@@ -182,92 +256,66 @@ class Catalog:
                 "its rename-on-close commit is unsafe under speculative "
                 "or zombie task attempts; use Catalog.write"
             )
-        path = self.path(name)
-        shutil.rmtree(path, ignore_errors=True)
-        os.makedirs(path, exist_ok=True)
-        a_schema = to_arrow_schema(df.schema)
-        names = list(df.columns)
-        dl_i = names.index("doc_len") if ledger_stats else -1
-        url_i = names.index("url") if ledger_stats else -1
-        part_i = names.index(partition_col) if partition_col else -1
+        path = self._fresh(name)
 
         def sink(batches):
-            import os as _os
-
             import pyarrow as pa
-            import pyarrow.compute as pc
-            import pyarrow.parquet as _pq
             from pyspark import TaskContext
 
-            from ..operators.xxhash import xxh64_str
-
-            pid = TaskContext.get().partitionId()
-            writers: dict = {}  # partition value (or None) → (tmp, final, writer)
-
-            def get_writer(key, schema):
-                w = writers.get(key)
-                if w is None:
-                    if key is None:
-                        d = path
-                    else:
-                        d = _os.path.join(path, f"{partition_col}={key}")
-                        _os.makedirs(d, exist_ok=True)
-                    tmp = _os.path.join(d, f".part-{pid:05d}.parquet.inprogress")
-                    final = _os.path.join(d, f"part-{pid:05d}.parquet")
-                    w = (tmp, final, _pq.ParquetWriter(tmp, schema))
-                    writers[key] = w
-                return w[2]
-
-            n = 0
-            ntok = 0
-            fp = 0
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                n += rb.num_rows
-                if dl_i >= 0:
-                    ntok += int(pc.sum(rb.column(dl_i)).as_py() or 0)
-                    for u in rb.column(url_i).to_pylist():
-                        # Spark xxhash64(NULL) = 42 (the unmodified
-                        # seed) — replicate so the fingerprint matches
-                        # CORPUS_AGGS on corpora with null urls
-                        fp ^= xxh64_str(u) if u is not None else 42
-                if part_i < 0:
-                    get_writer(None, rb.schema).write_batch(rb)
-                    continue
-                # split the batch into runs of equal partition value
-                # (upstream sorts by the partition column, so runs are
-                # long; arbitrary interleave still works, just slower)
-                vals = rb.column(part_i).to_numpy(zero_copy_only=False)
-                body = rb.drop_columns([partition_col])
-                start = 0
-                for i in range(1, rb.num_rows + 1):
-                    if i == rb.num_rows or vals[i] != vals[start]:
-                        get_writer(int(vals[start]), body.schema).write_batch(
-                            body.slice(start, i - start)
-                        )
-                        start = i
-            for tmp, final, w in writers.values():
-                w.close()
-                _os.replace(tmp, final)
+            got = write_parts(
+                path, batches, TaskContext.get().partitionId(),
+                partition_col, ledger_stats,
+            )
             yield pa.record_batch(
-                [
-                    pa.array([n], pa.int64()),
-                    pa.array([ntok], pa.int64()),
-                    pa.array([fp], pa.int64()),
-                ],
-                names=["n", "ntok", "fp"],
+                [pa.array([v], pa.int64()) for v in got], names=["n", "ntok", "fp"]
             )
 
         rows = df.mapInArrow(sink, "n long, ntok long, fp long").collect()
-        n_docs = sum(int(r["n"]) for r in rows)
-        n_tokens = sum(int(r["ntok"]) for r in rows)
+        return self._commit(
+            path, to_arrow_schema(df.schema), [tuple(r) for r in rows],
+            ledger_stats, partition_col,
+        )
+
+    def write_arrow_local(
+        self,
+        table,
+        name: str,
+        ledger_stats: bool | str = False,
+        partition_col: str | None = None,
+    ) -> dict:
+        """``write_arrow_direct`` for a DRIVER-LOCAL pyarrow Table: the
+        same part writer (``write_parts``, as task 0), the same commit
+        and the same returned scalars, with no Spark job — the write
+        half of an in-process index update.  With ``partition_col`` the
+        table should be sorted by it, so each partition gets one
+        part-00000.parquet."""
+        path = self._fresh(name)
+        got = write_parts(
+            path, table.combine_chunks().to_batches(), 0, partition_col,
+            ledger_stats,
+        )
+        return self._commit(path, table.schema, [got], ledger_stats, partition_col)
+
+    def _fresh(self, name: str) -> str:
+        path = self.path(name)
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path, exist_ok=True)
+        return path
+
+    @staticmethod
+    def _commit(path, schema, parts, ledger_stats, partition_col) -> dict:
+        """Fold the per-task (rows, tokens, fingerprint) partials and
+        write the ``_SUCCESS`` marker."""
+        import pyarrow.parquet as pq
+
+        n_docs = sum(int(p[0]) for p in parts)
+        n_tokens = sum(int(p[1]) for p in parts)
         fp = 0
-        for r in rows:
-            fp ^= int(r["fp"])
+        for p in parts:
+            fp ^= int(p[2])
         if n_docs == 0 and partition_col is None:
             # schema-ful empty file so the committed table stays readable
-            pq.write_table(a_schema.empty_table(), os.path.join(path, "part-00000.parquet"))
+            pq.write_table(schema.empty_table(), os.path.join(path, "part-00000.parquet"))
         with open(os.path.join(path, "_SUCCESS"), "w"):
             pass
         out = {"n_docs": n_docs}
@@ -295,3 +343,24 @@ class Catalog:
             for f in files:
                 total += os.path.getsize(os.path.join(dirpath, f))
         return total
+
+    def io(self, name: str, partitions: tuple[str, list] | None = None) -> dict:
+        """Rows and bytes of the data files of table `name` (only the
+        ``col=value`` directories of ``partitions`` when given), from
+        the parquet footers — the per-stage rows/bytes of an update
+        profile, with no scan."""
+        import pyarrow.parquet as pq
+
+        root = self.path(name)
+        dirs = [root] if partitions is None else [
+            os.path.join(root, f"{partitions[0]}={v}") for v in sorted(set(partitions[1]))
+        ]
+        rows = nbytes = 0
+        for top in dirs:
+            for dirpath, _dirs, files in os.walk(top):
+                for f in files:
+                    if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                        fp = os.path.join(dirpath, f)
+                        rows += pq.read_metadata(fp).num_rows
+                        nbytes += os.path.getsize(fp)
+        return {"rows": rows, "bytes": nbytes}

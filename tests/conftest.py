@@ -47,3 +47,20 @@ def tiny_index(spark, tiny_corpus, tmp_path_factory):
     metrics = build_index(spark, pages, index_dir, cfg, resume=False)
     return {"dir": index_dir, "cfg": cfg, "metrics": metrics,
             "corpus": tiny_corpus}
+
+
+@pytest.fixture
+def each_update_path(monkeypatch):
+    """Iterates the two ``incremental_update`` paths, patching
+    ``incremental.LOCAL_MAX_BYTES`` for each: cap 0 sends every update
+    to the Spark plan, a cap above any size estimate (an input of
+    unknown size, e.g. an RDD-backed frame, is estimated at 2^63-1
+    bytes) runs every update in-process."""
+    from codegraph_rust_spark.streaming import incremental
+
+    def paths():
+        for name, cap in (("spark", 0), ("local", 1 << 64)):
+            monkeypatch.setattr(incremental, "LOCAL_MAX_BYTES", cap)
+            yield name
+
+    return paths

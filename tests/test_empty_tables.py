@@ -60,22 +60,24 @@ def nulltext_dir(spark, tmp_path_factory, empty_dir):
     return d
 
 
-def test_empty_build_then_incremental_growth(spark, tmp_path):
+def test_empty_build_then_incremental_growth(spark, tmp_path, each_update_path):
     """Fresh-deployment path: build over a 0-doc corpus, then grow the
-    index incrementally — the empty-postings seeding must keep the
-    hive layout splice-compatible (a root-level parquet file would
-    break partition discovery after the first tbucket rename-in)."""
+    index incrementally, on both update paths — the empty-postings
+    seeding must keep the hive layout splice-compatible (a root-level
+    parquet file would break partition discovery after the first
+    tbucket rename-in)."""
     import datetime
+    import shutil
 
     from codegraph_rust_spark.config import IndexConfig
     from codegraph_rust_spark.operators.topk import InvertedIndex
     from codegraph_rust_spark.plans.build import build_index
     from codegraph_rust_spark.streaming.incremental import incremental_update
 
-    idx_dir = str(tmp_path / "idx")
+    base_dir = str(tmp_path / "empty")
     cfg = IndexConfig(input_partitions=2)
     empty = spark.createDataFrame([], "url string, warc_ts timestamp, text string")
-    m = build_index(spark, empty, idx_dir, cfg, resume=False)
+    m = build_index(spark, empty, base_dir, cfg, resume=False)
     assert m["n_docs"] == 0
     rows = [
         (f"https://g/{i}", datetime.datetime(2026, 1, 1),
@@ -83,10 +85,14 @@ def test_empty_build_then_incremental_growth(spark, tmp_path):
         for i in range(5)
     ]
     batch = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
-    incremental_update(spark, batch, idx_dir, cfg, full_snapshot=False)
-    idx = InvertedIndex(spark, idx_dir, cfg)
-    assert idx.n_docs == 5
-    assert idx.topk("hello", k=3).count() == 3
+    for path in each_update_path():
+        idx_dir = str(tmp_path / path)
+        shutil.copytree(base_dir, idx_dir)
+        m = incremental_update(spark, batch, idx_dir, cfg, full_snapshot=False)
+        assert m["path"] == path
+        idx = InvertedIndex(spark, idx_dir, cfg)
+        assert idx.n_docs == 5
+        assert idx.topk("hello", k=3).count() == 3
 
 
 def test_document_entries_survive_null_text(spark, nulltext_dir):
