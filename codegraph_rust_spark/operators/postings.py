@@ -491,14 +491,15 @@ def encode_partials(
 
 
 def _binary_flat(arr):
-    """(uint8 values, int64 offsets) of an Arrow Binary column —
-    zero-copy views over the Arrow buffers."""
+    """(uint8 values, int64 offsets) of an Arrow Binary or LargeBinary
+    array — views over the Arrow buffers (offsets widened)."""
     if len(arr) == 0:
         return np.zeros(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
     bufs = arr.buffers()
-    offs = np.frombuffer(bufs[1], dtype=np.int32)[
+    wide = pa.types.is_large_binary(arr.type)
+    offs = np.frombuffer(bufs[1], dtype=np.int64 if wide else np.int32)[
         arr.offset : arr.offset + len(arr) + 1
-    ].astype(np.int64)
+    ].astype(np.int64, copy=False)
     return np.frombuffer(bufs[2], dtype=np.uint8), offs
 
 
@@ -718,6 +719,10 @@ def _block_starts(run_offs: np.ndarray, block: int) -> np.ndarray:
     return run_offs[:-1][block_run] + within
 
 
+# payload bytes per output chunk of ``merge_delta``
+MERGE_CHUNK_BYTES = 1 << 28
+
+
 def merge_delta(old, removed, added, cfg: IndexConfig):
     """The delta-merge kernel: fold a doc-granular delta into encoded
     posting rows, vectorized over every affected term at once.
@@ -743,11 +748,19 @@ def merge_delta(old, removed, added, cfg: IndexConfig):
 
     A term left with no posting vanishes; a term new to the corpus is
     encoded from the delta alone.  Returns POSTINGS_TABLE_SCHEMA rows
-    sorted by (tbucket, term_id, salt).  Both update paths run it: the
+    sorted by (tbucket, term_id, salt), in chunks of about
+    ``MERGE_CHUNK_BYTES`` payload bytes.  Both update paths run it: the
     Spark plan once per task (``delta_merge_postings``), an in-process
     update once on the driver (streaming/incremental.py)."""
     schema = to_arrow_schema(POSTINGS_SCHEMA)
-    old = old.select(POSTINGS_SCHEMA.names).cast(schema).combine_chunks()
+    # payloads are LargeBinary inside the kernel: the affected rows of a
+    # task's buckets, joined into one array, may pass the 2 GiB a Binary
+    # array's int32 offsets address
+    wide = pa.schema([
+        f.with_type(pa.large_binary()) if pa.types.is_binary(f.type) else f
+        for f in schema
+    ])
+    old = old.select(POSTINGS_SCHEMA.names).cast(wide).combine_chunks()
     rm_t, rm_d = (np.asarray(x, dtype=np.int64) for x in removed)
     ad_t, ad_d, ad_tf, ad_dl = (np.asarray(x, dtype=np.int64) for x in added)
     block = cfg.block_size
@@ -801,19 +814,21 @@ def merge_delta(old, removed, added, cfg: IndexConfig):
     merged = pa.table(
         [pa.array(cols[0], pa.int64()), pa.array(cols[1], pa.int32()),
          pa.array(new_df, pa.int64()), *(
-             pa.array(c, schema.field(i).type) for i, c in enumerate(cols[2:], 3)
+             pa.array(c, wide.field(i).type) for i, c in enumerate(cols[2:], 3)
          )],
-        schema=schema,
+        schema=wide,
     )
-    out = pa.concat_tables([keep, merged])
-    tb = cfg.term_buckets
-    out = out.append_column(
-        "tbucket",
-        pa.array(np.mod(out.column("term_id").to_numpy(), tb).astype(np.int32)),
-    )
-    return out.sort_by(
-        [("tbucket", "ascending"), ("term_id", "ascending"), ("salt", "ascending")]
-    ).cast(to_arrow_schema(POSTINGS_TABLE_SCHEMA))
+    out = pa.concat_tables([keep, merged]).combine_chunks()
+    term = out.column("term_id").to_numpy()
+    tbucket = np.mod(term, cfg.term_buckets).astype(np.int32)
+    out = out.append_column("tbucket", pa.array(tbucket))
+    order = np.lexsort((out.column("salt").to_numpy(), term, tbucket))
+    # emitted in pieces of about MERGE_CHUNK_BYTES payload bytes, each
+    # narrowed back to Binary (n_bytes bounds every payload column)
+    cum = np.cumsum(out.column("n_bytes").to_numpy()[order]) // MERGE_CHUNK_BYTES
+    pieces = np.split(order, np.flatnonzero(np.diff(cum)) + 1)
+    target = to_arrow_schema(POSTINGS_TABLE_SCHEMA)
+    return pa.concat_tables([out.take(p).cast(target) for p in pieces])
 
 
 # the Spark update plan's kernel input: posting rows of the touched

@@ -49,80 +49,40 @@ POSTINGS = "postings"
 MANIFEST = "build_manifest"
 
 
-def write_lineage(cat: Catalog, spark: SparkSession, fingerprint: int) -> int:
+def write_lineage(cat: Catalog, fingerprint: int) -> int:
     """Per-tbucket manifest rows (north rule: per-partition lineage +
-    metrics), mirroring file_metadata (surql:856-870).  Returns the
-    total posting count (summed driver-side from the 32 bucket rows, so
-    the caller needs no separate aggregation job over postings)."""
-    post = cat.read(spark, POSTINGS)
-    # n_bytes is precomputed at encode time; the fallback re-scans the
-    # binary payloads (pre-n_bytes indexes only, e.g. resumed builds)
-    bytes_expr = (
-        F.sum("n_bytes")
-        if "n_bytes" in post.columns
-        else F.sum(
-            F.length("doc_payload") + F.length("tf_payload") + F.length("dl_payload")
-        )
-    )
-    # collect the per-bucket rows (≤ term_buckets of them) and write the
-    # manifest from the driver — one scan job + a trivial write, instead
-    # of the write-then-read-back pair (each Spark action carries a
-    # fixed scheduling floor that the scaling protocol counts)
-    buckets = (
-        post.groupBy("tbucket")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum("n").alias("postings"),
-            bytes_expr.alias("bytes"),
-        )
-        .collect()
-    )
-    return _write_manifest(cat, [tuple(r) for r in buckets], fingerprint)
-
-
-def write_lineage_local(cat: Catalog, fingerprint: int) -> int:
-    """``write_lineage`` computed on the driver: the per-bucket
-    aggregates come from pyarrow over the postings table's two int
-    columns (``n``, ``n_bytes``), with no Spark job — the lineage step
-    of an index update's commit (streaming/incremental.py)."""
-    post = cat.read_local(POSTINGS, columns=["tbucket", "n", "n_bytes"])
-    agg = post.group_by("tbucket").aggregate(
-        [("n", "count"), ("n", "sum"), ("n_bytes", "sum")]
-    ).to_pydict()
-    return _write_manifest(
-        cat,
-        sorted(zip(agg["tbucket"], agg["n_count"], agg["n_sum"], agg["n_bytes_sum"])),
-        fingerprint,
-    )
-
-
-def _write_manifest(cat: Catalog, buckets: list[tuple], fingerprint: int) -> int:
-    """Commit the manifest from (tbucket, rows, postings, bytes) rows;
-    returns the summed postings."""
+    metrics), mirroring file_metadata (surql:856-870).  The per-bucket
+    aggregates come from pyarrow over the postings table's int columns
+    (``n``, ``n_bytes`` — precomputed at encode time) on the driver, so
+    lineage costs no Spark job in a build or an index update.  Returns
+    the total posting count."""
     from datetime import datetime, timezone
 
     import pyarrow as pa
+    import pyarrow.compute as pc
 
+    post = cat.read_local(POSTINGS, columns=["tbucket", "n", "n_bytes"])
+    post = post.set_column(0, "tbucket", post.column(0).cast(pa.int32()))
+    agg = post.group_by("tbucket").aggregate(
+        [("n", "count"), ("n", "sum"), ("n_bytes", "sum")]
+    ).sort_by("tbucket")
+    n = agg.num_rows
     now = datetime.now(timezone.utc).replace(tzinfo=None)
-    tbucket, rows, postings, nbytes = (list(c) for c in zip(*buckets)) if buckets \
-        else ([], [], [], [])
     cat.write_local(
         pa.table(
             {
-                "tbucket": pa.array(tbucket, pa.int32()),
-                "rows": pa.array([int(r) for r in rows], pa.int64()),
-                "postings": pa.array([int(p or 0) for p in postings], pa.int64()),
-                "bytes": pa.array([int(b or 0) for b in nbytes], pa.int64()),
-                "stage": pa.array([POSTINGS] * len(buckets), pa.string()),
-                "input_fingerprint": pa.array(
-                    [int(fingerprint)] * len(buckets), pa.int64()
-                ),
-                "committed_at": pa.array([now] * len(buckets), pa.timestamp("us")),
+                "tbucket": agg.column("tbucket"),
+                "rows": agg.column("n_count").cast(pa.int64()),
+                "postings": agg.column("n_sum").fill_null(0).cast(pa.int64()),
+                "bytes": agg.column("n_bytes_sum").fill_null(0).cast(pa.int64()),
+                "stage": pa.array([POSTINGS] * n, pa.string()),
+                "input_fingerprint": pa.array([int(fingerprint)] * n, pa.int64()),
+                "committed_at": pa.array([now] * n, pa.timestamp("us")),
             }
         ),
         MANIFEST,
     )
-    return int(sum(int(p or 0) for p in postings))
+    return int(pc.sum(agg.column("n_sum")).as_py() or 0)
 
 
 CORPUS_AGGS = lambda: [  # noqa: E731 — shared by observe and agg paths
@@ -223,7 +183,7 @@ def derived_stages(
                 )
         timed(POSTINGS, _postings)
 
-    total = write_lineage(cat, spark, int(stats_row["input_fingerprint"] or 0))
+    total = write_lineage(cat, int(stats_row["input_fingerprint"] or 0))
     return {"n_docs": n_docs, "avgdl": avgdl, "total_postings": total}
 
 
@@ -317,7 +277,7 @@ def build_index(
                     probe_dups=False,
                 ),
                 TOKENIZED,
-                ledger_stats=cfg.doc_id_mode,
+                ledger_stats="hash" if cfg.doc_id_mode == "hash" else True,
             ),
         )
         metrics["stages"][TOKENIZED] = {"wall_s": round(time.time() - t, 3)}

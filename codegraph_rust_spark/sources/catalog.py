@@ -67,6 +67,9 @@ def write_parts(path, batches, pid: int, partition_col=None, ledger_stats=False)
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    if ledger_stats not in (False, True, "hash"):
+        raise ValueError(f"ledger_stats must be False, True or 'hash', got {ledger_stats!r}")
+
     writers: dict = {}  # partition value (or None) → (tmp, final, writer)
 
     def get_writer(key, schema):
@@ -243,9 +246,10 @@ class Catalog:
         With ``ledger_stats`` set the corpus scalars
         (n_docs/avgdl/n_tokens/input_fingerprint — CORPUS_AGGS
         semantics) ride the write as per-task partials folded on the
-        driver, so no separate corpus scan is needed: ``"hash"`` (the
-        ledger's doc_id_mode) says doc_id already is xxhash64(url),
-        ``True`` or ``"provided"`` hash every url (``ledger_fingerprint``).
+        driver, so no separate corpus scan is needed: ``True`` hashes
+        every url, ``"hash"`` (a ledger in doc_id_mode "hash") says
+        doc_id already is xxhash64(url) and XORs it
+        (``ledger_fingerprint``).
         Returned dict always carries ``n_docs``."""
         from pyspark.sql.pandas.types import to_arrow_schema
 

@@ -93,22 +93,25 @@ from ..plans.build import (
     TOKENIZED,
     read_docs,
     write_corpus_row,
-    write_lineage_local,
+    write_lineage,
     write_url_unique,
 )
 from ..sources.catalog import Catalog
 
 # Index bytes on disk (ledger + dictionary + postings) plus the input's
 # estimated bytes up to which an update runs in-process.  The
-# in-process path rewrites the whole ledger and dictionary and runs the
-# kernels serially on the driver, so its wall grows ~0.06 s per index
-# MB; the Spark plan pays 5-10 s of job and driver overhead per update
-# but runs on every core.  On a 4-vCPU host (2k-80k pages; 8-page
-# upsert, 1% and 5% snapshot deltas) every delta ran faster in-process
-# up to 102 MB (an 8-page upsert into an 80k-page index: 6.1 s vs
-# 7.5 s); the lowest crossover is above that and below 171 MB (a 1%
-# snapshot delta at 80k pages: 12.1 s vs 12.3 s).  Sweep in CHANGES.md.
-LOCAL_MAX_BYTES = 96 << 20
+# in-process path runs the kernels serially on the driver over the
+# whole ledger, the dictionary and every touched bucket; the Spark plan
+# pays 5-10 s of job overhead per update but runs on every core.  On a
+# 4-vCPU host (perfbench corpus, 2k-120k pages; 8-page upsert, 1% and
+# 5% snapshot deltas, upserts of 2k-40k new pages) no delta ran slower
+# in-process up to 152 MB, where the 8-page upsert into 120k pages
+# reached near parity (9.1 s vs 9.9 s); the first loss was a 1% delta
+# at 255 MB (21.6 s vs 17.5 s).  The cap sits just below 152 MB.
+# Input bytes cost the driver about as much memory per byte as index
+# bytes (peak RSS 14-21x the sum), so the sum also bounds the driver's
+# memory: about 2.6 GB at the cap.  Sweep in CHANGES.md.
+LOCAL_MAX_BYTES = 144 << 20
 
 # the update record: written once every _next table is committed,
 # deleted once the index has been rolled forward
@@ -158,7 +161,7 @@ def _roll_forward(cat: Catalog, rec: dict) -> None:
     # a physical docs dir from an older index would now be stale
     cat.drop(DOCS)
     write_corpus_row(cat, None, rec["corpus"])
-    write_lineage_local(cat, int(rec["corpus"]["input_fingerprint"] or 0))
+    write_lineage(cat, int(rec["corpus"]["input_fingerprint"] or 0))
     os.remove(cat.path(UPDATE_RECORD))
 
 
@@ -325,7 +328,7 @@ def _update_spark(spark, pages_new, cat, cfg, full_snapshot, metrics):
                 ).select(*old_tok.columns)
             ),
             TOKENIZED + "_next",
-            ledger_stats=cfg.doc_id_mode,
+            ledger_stats="hash" if cfg.doc_id_mode == "hash" else True,
         ),
     )
     next_tok = cat.read(spark, TOKENIZED + "_next")
@@ -486,7 +489,7 @@ def _update_local(spark, pages_new, cat, cfg, full_snapshot, metrics):
     new_tok = _reindex(keep, pages_re, src, cfg)
     next_stats = cat.write_arrow_local(
         pa.concat_tables([keep, new_tok]), TOKENIZED + "_next",
-        ledger_stats=cfg.doc_id_mode,
+        ledger_stats="hash" if cfg.doc_id_mode == "hash" else True,
     )
 
     rm_t, rm_d, rm_tf, _ = _postings_of(removed)

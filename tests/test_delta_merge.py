@@ -20,9 +20,11 @@ from codegraph_rust_spark.operators.postings import (
     POSTINGS_SCHEMA,
     POSTINGS_TABLE_SCHEMA,
     _encode_final_chunk,
+    _binary_flat,
     _n_salts_py,
     merge_delta,
 )
+from codegraph_rust_spark.operators import postings
 
 # tiny blocks exercise block-restarting delta chains; 4 buckets with
 # the base vocabulary in buckets 0-2 leave bucket 3 to new terms only
@@ -98,8 +100,8 @@ def _postings(docs):
     return tuple(np.asarray(x, dtype=np.int64) for x in (t, d, tf, dl))
 
 
-@pytest.mark.parametrize("seed", range(6))
-def test_kernel_equals_per_term_loop(seed):
+def _case(seed):
+    """(old rows with tbucket, removed, added, hot term, lone term)."""
     rng = np.random.default_rng(seed)
     # base vocabulary in buckets 0-2; HOT sits in 6 base docs (df 6 ≤ 8)
     base_terms = np.array([b + 4 * i for i in range(12) for b in (0, 1, 2)], np.int64)
@@ -123,9 +125,12 @@ def test_kernel_equals_per_term_loop(seed):
     for _doc, tfs in added:
         tfs[hot] = 3
         tfs[int(rng.choice(new_terms))] = 1
-    rm = _postings(removed)[:2]
-    ad = _postings(modified + added)
+    return old, _postings(removed)[:2], _postings(modified + added), hot, lone
 
+
+@pytest.mark.parametrize("seed", range(6))
+def test_kernel_equals_per_term_loop(seed):
+    old, rm, ad, hot, lone = _case(seed)
     got = merge_delta(old.drop_columns(["tbucket"]), rm, ad, CFG)
     want = _per_term_merge(old.drop_columns(["tbucket"]), rm, ad, CFG)
     assert got.equals(want)
@@ -145,3 +150,24 @@ def test_kernel_passes_unaffected_rows_through():
                       EMPTY[0], _postings(base), CFG)
     same = merge_delta(old.drop_columns(["tbucket"]), *EMPTY, CFG)
     assert same.equals(old)
+
+
+def test_kernel_takes_and_emits_many_chunks(monkeypatch):
+    """Rows arriving as many out-of-order chunks (a task's batches) and
+    output emitted in many small pieces give the same rows as one chunk
+    in, one out; the payload decode reads Binary and LargeBinary
+    offsets alike."""
+    old, rm, ad, _, _ = _case(0)
+    old = old.drop_columns(["tbucket"])
+    want = merge_delta(old, rm, ad, CFG)
+    chunked = pa.concat_tables([old.slice(i, 5) for i in range(0, old.num_rows, 5)][::-1])
+    assert chunked.column("doc_payload").num_chunks > 1
+    monkeypatch.setattr(postings, "MERGE_CHUNK_BYTES", 64)
+    got = merge_delta(chunked, rm, ad, CFG)
+    assert got.column("doc_payload").num_chunks > 1
+    assert got.equals(want)
+    pay = old.column("doc_payload").combine_chunks().slice(3)
+    for arr in (pay, pay.cast(pa.large_binary()).slice(0)):
+        vals, offs = _binary_flat(arr)
+        rows = [vals[a:b].tobytes() for a, b in zip(offs[:-1], offs[1:])]
+        assert rows == pay.to_pylist()

@@ -193,7 +193,7 @@ def _crash_points():
     def boom(*_a, **_k):
         raise Crash
 
-    real_swap, real_lineage = incremental._swap_table, incremental.write_lineage_local
+    real_swap, real_lineage = incremental._swap_table, incremental.write_lineage
 
     def swap_then_die(cat, name):
         if name == incremental.DICT:
@@ -210,8 +210,8 @@ def _crash_points():
         ("after ledger swap", "_swap_table", swap_then_die),
         ("after dictionary swap", "_splice_postings", boom),
         ("after postings splice", "write_corpus_row", boom),
-        ("after corpus row", "write_lineage_local", boom),
-        ("after manifest", "write_lineage_local", lineage_then_die),
+        ("after corpus row", "write_lineage", boom),
+        ("after manifest", "write_lineage", lineage_then_die),
     ]
 
 

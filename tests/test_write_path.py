@@ -5,6 +5,7 @@ import os
 
 import numpy as np
 import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
 from codegraph_rust_spark.plans.build import CORPUS_AGGS
@@ -31,11 +32,13 @@ def test_ledger_fingerprint_matches_corpus_aggs(spark, tmp_path):
         want = df.agg(*CORPUS_AGGS()).collect()[0]["input_fingerprint"]
         t = df.toArrow()
         assert ledger_fingerprint(t.column("doc_id"), t.column("url"), mode == "hash") == want
-        for stats in (mode, True):
+        for stats in ("hash", True) if mode == "hash" else (True,):
             got = cat.write_arrow_direct(df, f"ledger_{mode}", ledger_stats=stats)
             assert got["input_fingerprint"] == want, (mode, stats)
-        got = cat.write_arrow_local(t, f"local_{mode}", ledger_stats=mode)
-        assert got["input_fingerprint"] == want and got["n_docs"] == t.num_rows
+            got = cat.write_arrow_local(t, f"local_{mode}", ledger_stats=stats)
+            assert got["input_fingerprint"] == want and got["n_docs"] == t.num_rows
+    with pytest.raises(ValueError, match="ledger_stats"):
+        cat.write_arrow_local(t, "bad", ledger_stats="provided")
 
 
 def _row_loop_runs(vals):
