@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field, fields
+from dataclasses import dataclass, fields
 
 
 @dataclass(frozen=True)
@@ -43,29 +43,6 @@ class IndexConfig:
     # parquet file arrives as one split)
     input_partitions: int = 0
 
-    # big-document-first scheduling (reference parser.rs:105-107 sorts
-    # its parse queue by file size desc to cut tail latency): when True,
-    # the tokenize input is range-partitioned on payload length DESC, so
-    # the heaviest partitions are scheduled first and the small ones
-    # backfill the final wave — LPT scheduling at partition granularity.
-    # Off by default: with hash partitioning each task already gets a
-    # uniform size MIX, which is better when doc sizes are i.i.d.; turn
-    # this on for corpora with heavy size skew (few giant pages).
-    schedule_big_first: bool = False
-
-    extra: dict = field(default_factory=dict)
-
-
-@dataclass(frozen=True)
-class QueryConfig:
-    k: int = 10
-    # "taat": distributed term-at-a-time (decode → shuffle partials →
-    #         groupBy sum → global top-k). Exhaustive, fully parallel.
-    # "maxscore": block-max MaxScore pruning (WAND family) inside one
-    #         Arrow batch per (query, salt-shard) — skips non-essential
-    #         list enumeration.
-    mode: str = "taat"
-
 
 def load_index_config(index_dir: str) -> IndexConfig | None:
     """The config an index was BUILT with (config.json, written by
@@ -87,5 +64,7 @@ def load_index_config(index_dir: str) -> IndexConfig | None:
             "required for queries and incremental updates — restore it "
             "or rebuild the index"
         ) from e
+    # keys this version no longer has (an older index's
+    # schedule_big_first, extra) are dropped
     known = {f.name for f in fields(IndexConfig)}
     return IndexConfig(**{k: v for k, v in d.items() if k in known})

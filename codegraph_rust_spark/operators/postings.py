@@ -29,7 +29,6 @@ schema/codegraph.surql:933).  Here the index is explicit DataFrames:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -103,8 +102,9 @@ def n_salts_sql(cfg: IndexConfig, df: str = "df") -> str:
     the query path can route posting rows onto a common doc-residue
     grid (doc_id mod D) and run MaxScore per residue class in parallel
     (operators/topk.py) — the query-side half of the skew story.
-    The ONE definition behind build (``n_salts_expr``, salt_stage) and
-    query routing, so the two cannot drift."""
+    The ONE definition behind build (``n_salts_expr`` in
+    ``head_term_map``; its Python twin ``_n_salts_py``) and query
+    routing, so the two cannot drift."""
     thr = int(cfg.salt_df_threshold)
     whens = "".join(
         f" WHEN ceil({df} / {thr}) <= {p} THEN {p}"
@@ -125,14 +125,25 @@ def n_salts_expr(df_col, cfg: IndexConfig):
 
 
 def tokenize_stage(
-    pages: DataFrame, cfg: IndexConfig, probe_dups: bool = True
+    pages: DataFrame, cfg: IndexConfig, probe_dups: bool = False
 ) -> DataFrame:
-    """pages(doc_id?, url, html?, text?) → (doc_id, url, doc_len, tfs map).
+    """pages(doc_id?, url, html?, text?) → ledger rows (TOKENIZED_SCHEMA).
 
     doc_id: xxhash64(url) when cfg.doc_id_mode == "hash" (computed
     JVM-side — deterministic, shuffle-free, resume-stable), else the
     existing doc_id column.
+
+    doc_id = xxhash64(url) requires unique urls: a duplicate would
+    double its postings and inflate df/n_docs.  The guard is the
+    caller's — ``plans.build.write_url_unique`` on the written ledger,
+    or the in-process update's ``_reindex`` — so ``probe_dups`` only
+    accepts ``False``.
     """
+    if probe_dups:
+        raise ValueError(
+            "tokenize_stage has no url probe; guard url uniqueness on the "
+            "written ledger (plans.build.write_url_unique)"
+        )
     cols = set(pages.columns)
     use_html = "html" in cols
     analyzer = cfg.analyzer
@@ -147,33 +158,6 @@ def tokenize_stage(
         pages = pages.filter(F.col("doc_id").isNotNull())
 
     if cfg.doc_id_mode == "hash":
-        # doc_id = xxhash64(url) requires url uniqueness (a duplicate url
-        # would double its postings and inflate df/n_docs; MaxScore and
-        # TAAT would then disagree on the duplicate's score).  A blanket
-        # dropDuplicates would shuffle every html payload by url; instead
-        # probe for duplicates with a url-column-pruned aggregation (a
-        # scan of ~0.1% of the bytes) and pay the full-row dedup shuffle
-        # ONLY when the probe finds any — measured 21s of pure shuffle+
-        # Arrow machinery saved per 200k docs at local[4], and at 100 TB
-        # the difference between shuffling a url column and shuffling
-        # the corpus.  Full-width hash collisions (~n²/2^65) are
-        # accepted and documented, as in the reference's hash-keyed node
-        # identity (indexer.rs:1087-1102).
-        # probe_dups=False defers the uniqueness guard to the CALLER,
-        # which validates distinct(doc_id) == n_docs on the written
-        # ledger (a one-int64-column scan of the ledger instead of a
-        # url scan of the raw corpus) and falls back to dedup+rewrite
-        # only on violation — build_index / incremental_update do this.
-        if probe_dups:
-            has_dup = (
-                pages.groupBy("url")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .filter(F.col("c") > 1)
-                .limit(1)
-                .count()
-            )
-            if has_dup:
-                pages = pages.dropDuplicates(["url"])
         pages = pages.withColumn("doc_id", F.xxhash64("url"))
     elif "doc_id" not in cols:
         raise ValueError("doc_id_mode='provided' but no doc_id column")
@@ -335,7 +319,6 @@ def encode_partials(
     head_tids: np.ndarray,
     head_nsalts: np.ndarray,
     cfg: IndexConfig,
-    tbuckets: list[int] | None = None,
 ) -> DataFrame:
     """Per-partition SPIMI pass: tokenized doc rows → PARTIAL posting
     runs, encoded (delta + Group-VarInt) BEFORE the shuffle.
@@ -361,26 +344,11 @@ def encode_partials(
     hence no merge-side group — exceeds ~salt_df_threshold postings.
     """
     block_chunk = max(cfg.block_size * 4096, 1_000_000)  # postings per sort chunk
-    tb = cfg.term_buckets
-    tb_sel = (
-        np.array(sorted(int(b) for b in tbuckets), dtype=np.int64)
-        if tbuckets is not None
-        else None
-    )
-
-    import os as _os
-    _debug = _os.environ.get("CGRS_DEBUG_TIMING") == "1"
 
     def run(batches):
-        import sys as _sys
-        import time as _time
-
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        _t0 = _time.time()
-        _py = 0.0
-        _n = 0
         acc_t: list = []
         acc_s: list = []
         acc_d: list = []
@@ -433,7 +401,6 @@ def encode_partials(
             )
 
         for rb in batches:
-            _tb = _time.time()
             if rb.num_rows == 0:
                 continue
             tid = rb.column(2)  # term_ids
@@ -446,12 +413,6 @@ def encode_partials(
             flat_tf = pc.list_flatten(tfl).to_numpy().astype(np.int64)
             docs = np.repeat(rb.column(0).to_numpy(), counts)
             dls = np.repeat(rb.column(1).to_numpy(), counts)
-            if tb_sel is not None:
-                keep = np.isin(np.mod(flat_t, tb), tb_sel)
-                flat_t, flat_tf = flat_t[keep], flat_tf[keep]
-                docs, dls = docs[keep], dls[keep]
-                if len(flat_t) == 0:
-                    continue
             # head-term salt (identical to the n_salts_expr + pmod pair)
             if len(head_tids):
                 pos = np.searchsorted(head_tids, flat_t)
@@ -468,23 +429,13 @@ def encode_partials(
             acc_tf.append(flat_tf)
             acc_dl.append(dls)
             acc_n += len(flat_t)
-            _n += len(flat_t)
             if acc_n >= block_chunk:
                 out = flush()
-                _py += _time.time() - _tb
                 if out is not None:
                     yield out
-            else:
-                _py += _time.time() - _tb
         out = flush()
         if out is not None:
             yield out
-        if _debug:
-            print(
-                f"CGRS_PARTIAL rows={_n} py_s={_py:.2f} "
-                f"wall_s={_time.time() - _t0:.2f}",
-                file=_sys.stderr, flush=True,
-            )
 
     cols = tokenized.select("doc_id", "doc_len", "term_ids", "tfs")
     return cols.mapInArrow(run, schema=PARTIALS_SCHEMA)
@@ -588,27 +539,16 @@ def merge_partials(
     n_part = ((n_part + 63) // 64) * 64
     parted = partials.repartition(n_part, "term_id", "salt")
 
-    import os as _os
-    _debug = _os.environ.get("CGRS_DEBUG_TIMING") == "1"
-
     def run(batches):
-        import sys as _sys
-        import time as _time
-
         import pyarrow as pa
 
-        _t0 = _time.time()
-        _feed = 0.0
-        _tb = _time.time()
         terms: list = []
         salts: list = []
         ns: list = []
         streams: dict = {4: [], 5: []}  # col idx → [(data, offs)]
         doc_parts: list = []
         for rb in batches:
-            _feed += _time.time() - _tb
             if rb.num_rows == 0:
-                _tb = _time.time()
                 continue
             terms.append(rb.column(0).to_numpy())
             salts.append(rb.column(1).to_numpy())
@@ -616,7 +556,6 @@ def merge_partials(
             doc_parts.append(_binary_flat(rb.column(3)))
             streams[4].append(_binary_flat(rb.column(4)))
             streams[5].append(_binary_flat(rb.column(5)))
-            _tb = _time.time()
         if not terms:
             return
         term = np.concatenate(terms)
@@ -671,14 +610,6 @@ def merge_partials(
         _encode_final_chunk(
             rid2, term_of_rid, salt_of_rid, docs2, tfs2, dls2, block, out
         )
-        if _debug:
-            print(
-                f"CGRS_MERGE postings={len(docs2)} feed_wait_s={_feed:.2f} "
-                f"wall_s={_time.time() - _t0:.2f}",
-                file=_sys.stderr, flush=True,
-            )
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         a_schema = to_arrow_schema(MERGED_SCHEMA)
         for s in range(0, len(out), 65536):
             cz = list(zip(*out[s : s + 65536]))
@@ -925,7 +856,6 @@ def build_postings(
     dictionary: DataFrame,
     cfg: IndexConfig,
     est_rows: int | None = None,
-    tbuckets: list[int] | None = None,
 ) -> DataFrame:
     """Tokenized ledger → compressed posting rows with block skip
     metadata, SPIMI-merge formulation:
@@ -945,10 +875,6 @@ def build_postings(
          (partition pruning + row-group stats at query time; identity
          bucket→directory mapping for incremental splices).
 
-    ``tbuckets`` (incremental path) restricts encoding to terms whose
-    bucket is in the list — the filter applies inside the partial
-    encoder before anything is sorted or shuffled.
-
     Delta chains restart at every block boundary; block metadata is
     stat-independent (tf_max, dl_min) — see POSTINGS_SCHEMA.  Skew:
     salting caps every (term_id, salt) run at ~salt_df_threshold
@@ -956,7 +882,7 @@ def build_postings(
     memory bound is the 2.5M-posting partition cap.
     """
     head_tids, head_nsalts = head_term_map(dictionary, cfg)
-    partials = encode_partials(tokenized, head_tids, head_nsalts, cfg, tbuckets)
+    partials = encode_partials(tokenized, head_tids, head_nsalts, cfg)
     merged = merge_partials(partials, cfg, est_rows=est_rows)
     out = merged.join(dictionary.select("term_id", "df"), "term_id")
     out = out.select(*POSTINGS_SCHEMA.names).withColumn(

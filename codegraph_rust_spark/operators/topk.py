@@ -17,8 +17,8 @@ top-k per query):
   10^12-doc scan path.
 * **MaxScore** (``mode="maxscore"``) — WAND-family dynamic pruning,
   parallelized over DOC-RESIDUE classes: every posting row is routed
-  onto a common grid ``g = doc_id mod D`` (D = max salt count among
-  the query's terms; power-of-two salt counts make the routing exact —
+  onto a common grid ``g = doc_id mod D`` (D = the index's max_salts;
+  power-of-two salt counts make the routing exact —
   a head term's shard (salt s, n_salts n) serves residues
   {s, s+n, s+2n, …}; tail rows replicate to all D residues).  Each
   (query, residue) group holds the COMPLETE postings of its docs, so
@@ -92,7 +92,7 @@ from .codec import (
     delta_decode_blocked,
     delta_decode_blocks_at,
 )
-from .postings import POSTINGS_TABLE_SCHEMA, _n_salts_py, n_salts_sql
+from .postings import _n_salts_py, n_salts_sql
 from .xxhash import xxh64_str
 
 PARTIAL_SCHEMA = T.StructType(
@@ -361,13 +361,12 @@ class InvertedIndex:
     def _post_df(self) -> DataFrame:
         """The postings table for the Spark path: one parquet listing
         per handle, not per query, made by its first Spark-path query,
-        so opening a handle makes no JVM call.  The known schema spares
-        the footer-inference job a bare read runs."""
+        so opening a handle makes no JVM call.  ``Catalog.read`` gives
+        it the known schema, sparing the footer-inference job of a bare
+        read."""
         from ..plans.build import POSTINGS
 
-        return self.spark.read.schema(POSTINGS_TABLE_SCHEMA).parquet(
-            self.cat.path(POSTINGS)
-        )
+        return self.cat.read(self.spark, POSTINGS)
 
     # ---------------------------------------------------------- helpers
 
@@ -427,30 +426,16 @@ class InvertedIndex:
 
     # --------------------------------------------------------- MaxScore
 
-    def _topk_maxscore(
-        self, qterms: pd.DataFrame, k: int, residues: str = "max"
-    ) -> DataFrame:
+    def _topk_maxscore(self, qterms: pd.DataFrame, k: int) -> DataFrame:
         sc = self.scoring
-        if residues == "max":
-            d = str(int(self.cfg.max_salts))
-        elif residues == "adaptive":
-            d = "max(n_salts) OVER (PARTITION BY qid)"
-        else:
-            raise ValueError(f"unknown residues strategy {residues!r}")
+        d = str(int(self.cfg.max_salts))
         routes = _routes(qterms)
         matched = self._matched_postings(routes)
 
-        # route rows onto the per-query doc-residue grid g = doc mod D.
-        # ANY common D that every matched n_salts divides is exact
-        # (power-of-two n_salts all divide max_salts):
-        #   "max"      — D = cfg.max_salts, no extra pass (default: the
-        #                replicated tail lists are each bounded by
-        #                salt_df_threshold, so per-group waste is capped,
-        #                and skipping the aggregation pass wins latency —
-        #                measured p50 1.30s vs 1.55s at 20k docs);
-        #   "adaptive" — D = max matched n_salts per qid (tight
-        #                replication; one extra window exchange over the
-        #                pruned scan — for very large max_salts configs).
+        # route rows onto the doc-residue grid g = doc mod D with
+        # D = cfg.max_salts, which every (power-of-two) n_salts divides,
+        # so the routing is exact.  The replicated tail lists are each
+        # bounded by salt_df_threshold, so per-group waste is capped.
         # The scan projection fans each row out to its queries with a
         # literal CASE over term_id; a head shard (salt s, n_salts n)
         # then serves residues g = s + rep·n for rep < D/n.
@@ -508,10 +493,9 @@ class InvertedIndex:
 
     # ------------------------------------------------------- in-process
 
-    def _maxscore_local(self, routes, rows: pd.DataFrame, k: int,
-                        residues: str) -> pd.DataFrame:
-        """The Spark plan's (qid, g) groups built on the driver — same D
-        rule, same n_salts, g = salt + rep·n_salts — each run through
+    def _maxscore_local(self, routes, rows: pd.DataFrame, k: int) -> pd.DataFrame:
+        """The Spark plan's (qid, g) groups built on the driver — same D,
+        same n_salts, g = salt + rep·n_salts — each run through
         ``maxscore_group``: partial (qid, doc_id, score) rows."""
         rows["n_salts"] = [_n_salts_py(int(x), self.cfg) for x in rows["df"]]
         by_q: dict[int, list] = {}
@@ -519,8 +503,8 @@ class InvertedIndex:
             for q in routes[int(r.term_id)]:
                 by_q.setdefault(q, []).append(r)
         qids, docs, scores, counters = [], [], [], []
+        D = self.cfg.max_salts
         for q, rs in by_q.items():
-            D = self.cfg.max_salts if residues == "max" else max(r.n_salts for r in rs)
             groups: dict[int, list] = {}
             for r in rs:
                 for rep in range(D // r.n_salts):
@@ -560,15 +544,12 @@ class InvertedIndex:
         queries: list[tuple[int, str]],
         k: int = 10,
         mode: str = "taat",
-        residues: str = "max",
     ) -> DataFrame:
         """Top-k (qid, doc_id, score, rank) of every (qid, text) query,
         answered in-process or by the Spark plan by the dispatch rule
         in the module docstring; ``last_profile`` records which."""
         if mode not in ("taat", "maxscore"):
             raise ValueError(f"unknown mode {mode!r}")
-        if mode == "maxscore" and residues not in ("max", "adaptive"):
-            raise ValueError(f"unknown residues strategy {residues!r}")
         qterms = self.analyze_queries(queries)
         routes = _routes(qterms)
         self.last_profile = {"path": "local", "mode": mode,
@@ -585,7 +566,7 @@ class InvertedIndex:
             self.last_profile["path"] = "spark"
             if mode == "taat":
                 return self._topk_taat(qterms, k)
-            return self._topk_maxscore(qterms, k, residues=residues)
+            return self._topk_maxscore(qterms, k)
         if not meta["term_id"]:
             return self._local_result(None)
         rows = self._read_matched(routes).to_pandas()
@@ -593,7 +574,7 @@ class InvertedIndex:
             partial = taat_score(rows.itertuples(index=False), routes, self.scoring)
             partial = partial.groupby(["qid", "doc_id"], as_index=False, sort=False)["score"].sum()
         else:
-            partial = self._maxscore_local(routes, rows, k, residues)
+            partial = self._maxscore_local(routes, rows, k)
         return self._local_result(_rank_local(partial, k))
 
     def topk(self, query: str, k: int = 10, mode: str = "taat") -> DataFrame:
@@ -604,7 +585,6 @@ class InvertedIndex:
         queries: list[tuple[int, str]],
         k: int = 10,
         mode: str = "taat",
-        residues: str = "max",
     ) -> list:
         """``topk_batch`` behind the process-wide LRU+TTL result cache
         (functions/qcache.py — the reference daemon's (project, tool,
@@ -619,9 +599,9 @@ class InvertedIndex:
 
         return SERVICE_CACHE.get_or_compute(
             self.spark,
-            ("bm25_topk_batch", self.cat.root, tuple(queries), k, mode, residues),
+            ("bm25_topk_batch", self.cat.root, tuple(queries), k, mode),
             [os.path.join(self.cat.path(TOKENIZED), "_SUCCESS")],
-            lambda: self.topk_batch(queries, k=k, mode=mode, residues=residues).collect(),
+            lambda: self.topk_batch(queries, k=k, mode=mode).collect(),
         )
 
     def with_urls(self, topk_df: DataFrame) -> DataFrame:

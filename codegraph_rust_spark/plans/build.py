@@ -7,9 +7,9 @@ stage boundaries:
   reference stage                      → our stage
   ------------------------------------   -------------------------------
   clean/incremental gate (:869-976)    → resume check on committed tables
-  parse/extract (:1036-1060)           → tokenized table (mapInPandas)
+  parse/extract (:1036-1060)           → tokenized table (mapInArrow)
   deterministic IDs (:1087-1102)       → xxhash64(url) doc ids (JVM)
-  persist nodes + SEARCH upkeep (:1500)→ docs/dictionary/postings writes
+  persist nodes + SEARCH upkeep (:1500)→ ledger/dictionary/postings writes
   metadata + lineage (:2160-2173)      → build_manifest rows
   final metrics (:2192-2216)           → per-stage docs/sec, postings/sec
 
@@ -42,7 +42,6 @@ from ..operators.postings import (
 from ..sources.catalog import Catalog
 
 TOKENIZED = "tokenized"
-DOCS = "docs"
 CORPUS = "corpus_stats"
 DICT = "dictionary"
 POSTINGS = "postings"
@@ -116,10 +115,7 @@ def read_docs(spark: SparkSession, cat: Catalog) -> DataFrame:
     ledger — parquet columnar layout means reading the four scalar
     columns never touches the term/tf array pages, so a separate
     physical copy would only add a write stage and a second commit to
-    every build.  Older indexes that still carry a physical ``docs``
-    directory are read as-is."""
-    if cat.exists(DOCS):
-        return cat.read(spark, DOCS)
+    every build."""
     return cat.read(spark, TOKENIZED).select(
         "doc_id", "url", "content_hash", "doc_len"
     )
@@ -129,12 +125,12 @@ def derived_stages(
     spark: SparkSession, cat: Catalog, cfg: IndexConfig, metrics: dict,
     done: dict | None = None, corpus_row: dict | None = None,
 ) -> dict:
-    """corpus/dictionary/postings from a committed tokenized table.
-    Shared by the bulk build and incremental updates.  ``corpus_row``
-    carries the just-observed corpus scalars from the caller so the
-    fresh-build path never re-reads the one-row table it just wrote
-    (every Spark action has a fixed scheduling floor; the scaling
-    protocol counts them all)."""
+    """corpus/dictionary/postings from a committed tokenized table —
+    the stages of ``build_index`` after the ledger.  ``corpus_row``
+    carries the corpus scalars of the ledger write so the fresh-build
+    path never re-reads the one-row table it just wrote (every Spark
+    action has a fixed scheduling floor; the scaling protocol counts
+    them all)."""
     done = done or {}
 
     def timed(name, fn):
@@ -145,8 +141,8 @@ def derived_stages(
     tokenized = cat.read(spark, TOKENIZED)
 
     if not done.get(CORPUS):
-        # resume path only: the fresh build computes these scalars via
-        # an Observation riding the tokenize write (build_index)
+        # resume path only: in a fresh build these scalars ride the
+        # ledger write's per-task partials (write_arrow_direct)
         timed(CORPUS, lambda: cat.write(tokenized.agg(*CORPUS_AGGS()), CORPUS))
     stats_row = corpus_row or cat.read_local(CORPUS).to_pylist()[0]
     n_docs, avgdl = int(stats_row["n_docs"]), float(stats_row["avgdl"] or 0.0)
@@ -166,21 +162,6 @@ def derived_stages(
             # the merge tasks straight into tbucket=X parquet files
             # (no JVM row transpose of the payload blobs)
             cat.write_arrow_direct(post, POSTINGS, partition_col="tbucket")
-            # an EMPTY partitioned write leaves zero data files, which
-            # makes the table unreadable (no schema to infer).  Seed a
-            # schema-ful empty file INSIDE a tbucket=0 partition dir —
-            # NOT at the table root — so the hive layout stays uniform
-            # and a later incremental splice (which renames tbucket=X
-            # dirs in) never mixes leaf depths.
-            import glob as _glob
-
-            if not _glob.glob(
-                os.path.join(cat.path(POSTINGS), "**", "*.parquet"),
-                recursive=True,
-            ):
-                post.limit(0).drop("tbucket").write.mode("overwrite").parquet(
-                    os.path.join(cat.path(POSTINGS), "tbucket=0")
-                )
         timed(POSTINGS, _postings)
 
     total = write_lineage(cat, int(stats_row["input_fingerprint"] or 0))
@@ -188,19 +169,10 @@ def derived_stages(
 
 
 def partition_input(pages: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """Tokenize-input partitioning.  Default: uniform hash on url (each
-    task gets a size MIX — best when doc sizes are i.i.d.).  With
-    cfg.schedule_big_first: range-partition on payload length DESC so
-    the heaviest partitions are scheduled first and small ones backfill
-    the tail wave — LPT-style big-files-first (reference
-    parser.rs:105-107), for corpora with heavy size skew."""
+    """Tokenize-input partitioning: a uniform hash on url, so each task
+    gets a mix of document sizes."""
     if not cfg.input_partitions:
         return pages
-    if cfg.schedule_big_first:
-        src = "html" if "html" in pages.columns else "text"
-        return pages.repartitionByRange(
-            cfg.input_partitions, F.length(F.col(src)).desc(), "url"
-        )
     if "url" in pages.columns:
         return pages.repartition(cfg.input_partitions, "url")
     return pages.repartition(cfg.input_partitions)

@@ -56,6 +56,29 @@ def ledger_fingerprint(doc_id, url, hashed: bool) -> int:
     return fp
 
 
+def known_schema(name: str):
+    """The Spark schema of catalog table ``name`` when the engine fixes
+    it, else None: the postings table, the one that can be committed
+    with no data file (an empty partitioned write, or an update that
+    removes every document, leaves only ``_SUCCESS``)."""
+    from ..operators.postings import POSTINGS_TABLE_SCHEMA
+    from ..plans.build import POSTINGS
+
+    return POSTINGS_TABLE_SCHEMA if name == POSTINGS else None
+
+
+def data_files(top: str):
+    """The data files under directory ``top``, walked in order: files
+    and directories starting with ``_`` or ``.`` (commit marker,
+    checksums, in-progress parts, leftover swaps) are not data, as for
+    Spark's reader."""
+    for dirpath, dirs, files in os.walk(top):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if not f.startswith(("_", ".")):
+                yield os.path.join(dirpath, f)
+
+
 def write_parts(path, batches, pid: int, partition_col=None, ledger_stats=False):
     """Write one task's Arrow batches as ``part-{pid}.parquet`` — under
     ``partition_col=value`` subdirectories when partitioned, the
@@ -131,9 +154,6 @@ class Catalog:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(name))
 
-    def append(self, df: DataFrame, name: str) -> None:
-        df.write.mode("append").parquet(self.path(name))
-
     def write_local(self, table, name: str) -> None:
         """Commit a DRIVER-LOCAL pyarrow Table as a catalog table —
         for control-plane tables of at most a few hundred rows (corpus
@@ -190,25 +210,33 @@ class Catalog:
         ``partitions = (col, values)`` reads only the ``col=value``
         partition directories (a missing one holds no rows) and lists
         nothing else; the partition column itself is not returned.
-        When those directories hold no data file the result is an
-        empty table of null-typed ``columns``."""
+
+        When the table (or those directories) holds no data file the
+        result is an empty table of ``columns``, typed by the table's
+        ``known_schema`` (null-typed for a table without one)."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        src, partitioning = self.path(name), "hive"
-        if partitions is not None:
+        if partitions is None:
+            src, partitioning = self.path(name), "hive"
+            empty = next(data_files(src), None) is None
+        else:
             col, values = partitions
             src, partitioning = [], None
             for v in sorted(set(values)):
-                d = os.path.join(self.path(name), f"{col}={v}")
-                if os.path.isdir(d):
-                    src += [
-                        os.path.join(d, f) for f in sorted(os.listdir(d))
-                        if not f.startswith(("_", "."))
-                    ]
-            if not src:
+                src += data_files(os.path.join(self.path(name), f"{col}={v}"))
+            empty = not src
+        if empty:
+            known = known_schema(name)
+            if known is None:
                 return pa.table({c: pa.nulls(0) for c in columns or []})
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            schema = to_arrow_schema(known)
+            if partitions is not None:
+                schema = schema.remove(schema.get_field_index(partitions[0]))
+            return schema.empty_table().select(columns or schema.names)
         flt = None
         for c, values in (where or {}).items():
             e = pc.field(c).isin(list(values))
@@ -334,12 +362,13 @@ class Catalog:
         return out
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(self.path(name))
-
-    def drop(self, name: str) -> None:
-        p = self.path(name)
-        if os.path.isdir(p):
-            shutil.rmtree(p)
+        """Table ``name`` as a Spark DataFrame.  A table with a
+        ``known_schema`` is read with it: no footer-inference job, and a
+        committed table with no data file reads as 0 typed rows (schema
+        inference fails on it)."""
+        known = known_schema(name)
+        reader = spark.read if known is None else spark.read.schema(known)
+        return reader.parquet(self.path(name))
 
     def bytes(self, name: str) -> int:
         total = 0
@@ -361,10 +390,7 @@ class Catalog:
         ]
         rows = nbytes = 0
         for top in dirs:
-            for dirpath, _dirs, files in os.walk(top):
-                for f in files:
-                    if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                        fp = os.path.join(dirpath, f)
-                        rows += pq.read_metadata(fp).num_rows
-                        nbytes += os.path.getsize(fp)
+            for fp in data_files(top):
+                rows += pq.read_metadata(fp).num_rows
+                nbytes += os.path.getsize(fp)
         return {"rows": rows, "bytes": nbytes}

@@ -88,7 +88,6 @@ from ..operators.postings import (
 )
 from ..plans.build import (
     DICT,
-    DOCS,
     POSTINGS,
     TOKENIZED,
     read_docs,
@@ -158,8 +157,6 @@ def _roll_forward(cat: Catalog, rec: dict) -> None:
     _swap_table(cat, TOKENIZED)
     _swap_table(cat, DICT)
     _splice_postings(cat, rec["touched"], rec["written"])
-    # a physical docs dir from an older index would now be stale
-    cat.drop(DOCS)
     write_corpus_row(cat, None, rec["corpus"])
     write_lineage(cat, int(rec["corpus"]["input_fingerprint"] or 0))
     os.remove(cat.path(UPDATE_RECORD))

@@ -62,10 +62,10 @@ def nulltext_dir(spark, tmp_path_factory, empty_dir):
 
 def test_empty_build_then_incremental_growth(spark, tmp_path, each_update_path):
     """Fresh-deployment path: build over a 0-doc corpus, then grow the
-    index incrementally, on both update paths — the empty-postings
-    seeding must keep the hive layout splice-compatible (a root-level
-    parquet file would break partition discovery after the first
-    tbucket rename-in)."""
+    index incrementally, on both update paths.  The empty build commits
+    a postings table with no data file (no seed file, so no leaf-depth
+    mix after the first tbucket rename-in); both update paths read it
+    as 0 typed rows."""
     import datetime
     import shutil
 
@@ -93,6 +93,57 @@ def test_empty_build_then_incremental_growth(spark, tmp_path, each_update_path):
         idx = InvertedIndex(spark, idx_dir, cfg)
         assert idx.n_docs == 5
         assert idx.topk("hello", k=3).count() == 3
+
+
+def test_update_that_removes_every_doc_then_regrow(spark, tmp_path, each_update_path):
+    """A full-snapshot update with no pages empties the index: the
+    roll-forward splices away every postings bucket, leaving a
+    committed table with no data file.  On both update paths the
+    update commits (no ``_update.json`` is left), the emptied index
+    answers queries with 0 rows, and regrowing it gives the rows of
+    the original build."""
+    import datetime
+    import shutil
+
+    from codegraph_rust_spark.config import IndexConfig
+    from codegraph_rust_spark.operators.topk import InvertedIndex
+    from codegraph_rust_spark.plans.build import build_index
+    from codegraph_rust_spark.streaming.incremental import UPDATE_RECORD, incremental_update
+
+    schema = "url string, warc_ts timestamp, text string"
+    cfg = IndexConfig(input_partitions=2)
+    pages = spark.createDataFrame(
+        [(f"https://e/{i}", datetime.datetime(2026, 1, 1),
+          f"emptied page {i} hello world") for i in range(5)],
+        schema,
+    )
+    queries = [(0, "hello"), (1, "emptied page 3"), (2, "world 4")]
+    base_dir = str(tmp_path / "base")
+    build_index(spark, pages, base_dir, cfg, resume=False)
+
+    def ranked(idx_dir):
+        idx = InvertedIndex(spark, idx_dir, cfg)
+        rows = idx.topk_batch(queries, k=10).collect()
+        return idx, sorted((r["qid"], r["rank"], r["doc_id"], r["score"]) for r in rows)
+
+    _, want = ranked(base_dir)
+    assert len(want) > 5
+    for path in each_update_path():
+        idx_dir = str(tmp_path / path)
+        shutil.copytree(base_dir, idx_dir)
+        m = incremental_update(
+            spark, spark.createDataFrame([], schema), idx_dir, cfg, full_snapshot=True
+        )
+        assert m["path"] == path and m["n_docs"] == 0
+        assert not os.path.exists(os.path.join(idx_dir, UPDATE_RECORD))
+        idx, rows = ranked(idx_dir)
+        assert idx.n_docs == 0 and rows == []
+
+        m = incremental_update(spark, pages, idx_dir, cfg, full_snapshot=True)
+        assert m["path"] == path and m["n_docs"] == 5
+        assert not os.path.exists(os.path.join(idx_dir, UPDATE_RECORD))
+        idx, rows = ranked(idx_dir)
+        assert idx.n_docs == 5 and rows == want
 
 
 def test_document_entries_survive_null_text(spark, nulltext_dir):

@@ -134,6 +134,42 @@ def test_incremental_equals_scratch(
         assert ra == rb
 
 
+def test_stale_physical_docs_dir_is_never_read(
+    spark, v1_index, v2_pages, v2_scratch, tmp_path, each_update_path
+):
+    """An index written when ``docs`` was still a physical table may
+    hold a committed ``docs/`` directory.  The docs surface is the
+    ledger view, so a stale copy (every url rewritten) is never read:
+    ``with_urls`` answers from the ledger, and an update succeeds and
+    ends equal to a scratch build."""
+    qs = [(0, "running searches"), (1, "index café")]
+    for path in each_update_path():
+        d = _copy(v1_index, tmp_path / path)
+        ledger = pq.read_table(
+            os.path.join(d, "tokenized"), columns=["doc_id", "url", "content_hash", "doc_len"]
+        )
+        url_of = dict(zip(ledger.column("doc_id").to_pylist(), ledger.column("url").to_pylist()))
+        stale = ledger.set_column(
+            1, "url", pa.array([f"stale://{i}" for i in range(ledger.num_rows)])
+        )
+        os.makedirs(os.path.join(d, "docs"))
+        pq.write_table(stale, os.path.join(d, "docs", "part-00000.parquet"))
+        open(os.path.join(d, "docs", "_SUCCESS"), "w").close()
+
+        idx = InvertedIndex(spark, d, CFG)
+        rows = idx.with_urls(idx.topk_batch(qs, 10)).collect()
+        assert rows and all(r["url"] == url_of[r["doc_id"]] for r in rows)
+
+        m = incremental_update(spark, v2_pages, d, CFG)
+        assert m["path"] == path and m["changes"] == {
+            "added": 1, "modified": 1, "deleted": 1, "unchanged": 997
+        }
+        _assert_tables_equal(d, v2_scratch)
+        idx = InvertedIndex(spark, d, CFG)
+        rows = idx.with_urls(idx.topk_batch(qs, 10)).collect()
+        assert rows and all(not r["url"].startswith("stale://") for r in rows)
+
+
 def test_update_paths_write_equal_tables(
     spark, v1_index, v2_pages, tmp_path, each_update_path
 ):

@@ -33,6 +33,22 @@ def test_docs_table(spark, tiny_index):
     assert docs.filter(F.col("doc_len") == 0).count() >= 1
 
 
+def test_load_index_config_drops_removed_keys(tmp_path):
+    """The config.json of an index built when IndexConfig still had
+    ``schedule_big_first`` and ``extra`` loads; both keys are dropped."""
+    import dataclasses
+    import json
+
+    from codegraph_rust_spark.config import IndexConfig, load_index_config
+
+    cfg = IndexConfig(analyzer="simple", max_salts=16, input_partitions=4)
+    with open(tmp_path / "config.json", "w") as f:
+        json.dump(
+            {**dataclasses.asdict(cfg), "schedule_big_first": True, "extra": {"k": 1}}, f
+        )
+    assert load_index_config(str(tmp_path)) == cfg
+
+
 def test_dictionary_invariants(spark, tiny_index):
     d = tiny_index["dir"]
     from codegraph_rust_spark.plans.build import read_docs
@@ -107,36 +123,6 @@ def test_write_arrow_direct_refuses_non_local_master(spark, tmp_path, monkeypatc
     with pytest.raises(RuntimeError, match="local master"):
         cat.write_arrow_direct(df, "ok")
     assert cat.exists("ok")  # the committed table was not touched
-
-
-def test_big_first_scheduling_same_index(spark, tiny_index, tmp_path):
-    """schedule_big_first range-partitions the tokenize input on payload
-    length DESC (reference parser.rs:105-107 big-files-first); the
-    resulting index must be identical to the hash-partitioned build."""
-    import dataclasses
-
-    from codegraph_rust_spark.plans.build import build_index
-
-    cfg = dataclasses.replace(tiny_index["cfg"], schedule_big_first=True)
-    pages = spark.read.parquet(
-        os.path.join(tiny_index["corpus"], "pages.parquet"))
-    work = str(tmp_path / "big_first_idx")
-    build_index(spark, pages, work, cfg, resume=False)
-
-    for tbl in ("dictionary", "corpus_stats"):
-        a = {tuple(r) for r in
-             spark.read.parquet(os.path.join(tiny_index["dir"], tbl)).collect()}
-        b = {tuple(r) for r in
-             spark.read.parquet(os.path.join(work, tbl)).collect()}
-        assert a == b, tbl
-    cols = ["term_id", "salt", "df", "n", "doc_payload", "tf_payload"]
-    a = {tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
-         for r in spark.read.parquet(
-             os.path.join(tiny_index["dir"], "postings")).select(cols).collect()}
-    b = {tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
-         for r in spark.read.parquet(
-             os.path.join(work, "postings")).select(cols).collect()}
-    assert a == b
 
 
 def test_resume_skips_committed_and_rebuilds_missing(spark, tiny_index, tmp_path):

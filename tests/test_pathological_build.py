@@ -121,3 +121,14 @@ def test_url_guard_raises_on_doc_id_collision(spark, tmp_path):
     with pytest.raises(ValueError, match="doc_id 7"):
         write_url_unique(spark, cat, TOKENIZED, IndexConfig(), write)
     assert calls == [False, True]  # the dedup rewrite ran, then re-checked
+
+
+def test_tokenize_stage_has_no_url_probe(spark):
+    """tokenize_stage has no eager url-duplicate probe: the guard runs
+    on the written ledger, so asking for the probe raises and names
+    that guard."""
+    from codegraph_rust_spark.operators.postings import tokenize_stage
+
+    pages = spark.createDataFrame([("https://p/a", "text")], "url string, text string")
+    with pytest.raises(ValueError, match="write_url_unique"):
+        tokenize_stage(pages, IndexConfig(), probe_dups=True)

@@ -55,22 +55,6 @@ def test_q1_whole_stage_codegen(spark):
     assert "*(" in executed  # WholeStageCodegen spans render as *(n)
 
 
-def test_big_first_range_partitions(spark, tiny_corpus):
-    """schedule_big_first plans a RANGE partitioning on payload length
-    DESC (big-files-first, reference parser.rs:105-107); default plans a
-    hash repartition on url."""
-    from codegraph_rust_spark.config import IndexConfig
-    from codegraph_rust_spark.plans.build import partition_input
-
-    pages = spark.read.parquet(os.path.join(tiny_corpus, "pages.parquet"))
-    cfg = IndexConfig(input_partitions=8, schedule_big_first=True)
-    plan = _formatted(partition_input(pages, cfg))
-    assert "rangepartitioning" in plan.lower()
-    assert "length" in plan.lower() and "DESC" in plan
-    default = _formatted(partition_input(pages, IndexConfig(input_partitions=8)))
-    assert "hashpartitioning" in default.lower()
-
-
 def test_topk_query_broadcasts_query_terms(spark, tiny_index):
     from codegraph_rust_spark.operators.topk import InvertedIndex
 

@@ -97,9 +97,8 @@ def test_maxscore_rank_identical(spark, tiny_index, oracle_results, each_path):
 @pytest.fixture(scope="module")
 def salted_index(spark, tiny_corpus, tmp_path_factory):
     """Second index with an aggressive salting config (max_salts=64,
-    low df threshold) so the adaptive residue router has real work:
-    matched term lists span n_salts ∈ {1..64} and the per-qid D must
-    be computed, not assumed."""
+    low df threshold) so the residue router has real work: matched term
+    lists span n_salts ∈ {1..64} on the D = 64 grid."""
     from codegraph_rust_spark.config import IndexConfig
     from codegraph_rust_spark.plans.build import build_index
 
@@ -110,20 +109,16 @@ def salted_index(spark, tiny_corpus, tmp_path_factory):
     return {"dir": index_dir, "cfg": cfg, "corpus": tiny_corpus}
 
 
-def test_maxscore_adaptive_residues_rank_identical(spark, salted_index, each_path):
-    """residues='adaptive' (per-qid D = max matched n_salts) must be
-    EXACTLY as rank-identical as the default residues='max' — the two
-    strategies route the same postings onto different residue grids
-    but may never disagree on scores (topk.py adaptive branch)."""
-    d = salted_index["dir"]
+def test_maxscore_rank_identical_at_64_salts(spark, salted_index, each_path):
+    """A multi-query MaxScore batch over the 64-salt index — head lists
+    split up to 64 ways, tail lists replicated to all 64 residues — is
+    rank-identical to the oracle on both query paths."""
     queries, golden = _golden(salted_index)
-    idx = InvertedIndex(spark, d, salted_index["cfg"])
-    for _path in each_path():
-        for residues in ("max", "adaptive"):
-            got = idx.topk_batch(
-                queries, k=10, mode="maxscore", residues=residues
-            ).collect()
-            _check(got, golden, queries)
+    idx = InvertedIndex(spark, salted_index["dir"], salted_index["cfg"])
+    for path in each_path():
+        got = idx.topk_batch(queries, k=10, mode="maxscore").collect()
+        assert idx.last_profile["path"] == path
+        _check(got, golden, queries)
 
 
 def test_one_query_batches_rank_identical(spark, tiny_index, salted_index, each_path):
@@ -143,19 +138,16 @@ def test_one_query_batches_rank_identical(spark, tiny_index, salted_index, each_
 
 def test_paths_return_identical_rows(spark, salted_index, each_path):
     """The in-process path runs the Spark plan's (qid, g) groups
-    through the same kernels: MaxScore rows (both residue grids) are
-    equal in (qid, doc_id, rank) and bit-equal in score; TAAT rows are
+    through the same kernels: MaxScore rows are equal in
+    (qid, doc_id, rank) and bit-equal in score; TAAT rows are
     rank-identical with |Δscore| ≤ 1e-9 (Spark sums partials in
     arbitrary order)."""
     queries, _ = _golden(salted_index)
     idx = InvertedIndex(spark, salted_index["dir"], salted_index["cfg"])
-    for mode, residues in (("maxscore", "max"), ("maxscore", "adaptive"),
-                           ("taat", "max")):
+    for mode in ("maxscore", "taat"):
         got = {}
         for path in each_path():
-            rows = idx.topk_batch(
-                queries, k=10, mode=mode, residues=residues
-            ).collect()
+            rows = idx.topk_batch(queries, k=10, mode=mode).collect()
             got[path] = sorted(
                 (r["qid"], r["rank"], r["doc_id"], r["score"]) for r in rows
             )
@@ -163,7 +155,7 @@ def test_paths_return_identical_rows(spark, salted_index, each_path):
         assert len(spark_rows) == len(local_rows) > 0
         assert [r[:3] for r in spark_rows] == [r[:3] for r in local_rows], mode
         if mode == "maxscore":
-            assert spark_rows == local_rows, residues
+            assert spark_rows == local_rows
         else:
             assert all(
                 abs(a[3] - b[3]) <= 1e-9 for a, b in zip(spark_rows, local_rows)
